@@ -75,15 +75,15 @@ _PRIME = (1 << 31) - 1
 
 from pandance_spark._kernel import spread_partitions as _spread  # noqa: E402
 
-# r12 skew guard for the join->aggregation rewrites (dedup_substrings,
-# fingerprint_overlap_join): groups whose occurrence count exceeds this
-# are routed through the AQE-splittable self-join instead of being
-# collected into a single aggregation row.  Bounds the per-row memory of
-# the collected path at ~_HOT_GROUP_CAP list entries plus
+# Row-memory guard of _guarded_pairs (the hot-key-guarded pairing behind
+# fingerprint_overlap_join and dedup_substrings): keys seen more than
+# this many times pair through the AQE-splittable self-join instead of
+# being collected into a single aggregation row.  Bounds the per-row
+# memory of the collected path at ~_HOT_GROUP_CAP list entries plus
 # ~_HOT_GROUP_CAP^2/2 emitted combo structs (<~1 MB at 256), independent
 # of corpus-wide key frequency.  Scale-independent (it caps a ROW, not a
-# partition), so a constant is correct at any input size; tests shrink
-# it via monkeypatch to exercise the hot path on small fixtures.
+# partition), so a constant is correct at any input size; read at call
+# time, so tests shrink it via monkeypatch to reach the hot path.
 _HOT_GROUP_CAP = 256
 
 
@@ -1622,6 +1622,77 @@ def overlap_set_join(
     )
 
 
+def _guarded_pairs(
+    stream: DataFrame,
+    keys: list,
+    payload: list,
+    cap: Optional[int],
+) -> DataFrame:
+    """Every pair of ``stream`` rows that share ``keys``: one row per
+    pair of occurrences, ``(a, b)`` structs of the ``payload`` columns
+    with ``a < b`` (Spark orders structs field by field).  Keys seen
+    more than ``cap`` times are dropped; ``cap=None`` keeps every key.
+    Payloads must be non-NULL and distinct within a key.
+
+    Hot-key guard: a plain ``groupBy(keys).count()`` (combined map-side,
+    so its shuffle is key-sized) finds the keys seen more than
+    ``bound = min(cap, _HOT_GROUP_CAP)`` times.  The other keys'
+    occurrences are collected behind a broadcast left-anti join against
+    them and paired in-group — ordered combinations of the sorted list
+    are exactly the self-join's ``a < b`` rows — so no collected row
+    exceeds ``bound`` entries, however frequent a key is corpus-wide.
+    Keys the cap keeps above the guard (count in
+    ``(_HOT_GROUP_CAP, cap]``, or every hot key when ``cap`` is None)
+    pair through the AQE-splittable self-join on ``keys & (a < b)``:
+    their output is inherent, and it spreads over reducers instead of
+    landing on one aggregation row.  The two pair streams are unioned.
+
+    Plan shape (executed AQE plan): two key-hash exchanges, the
+    count's and the collect's, and a BroadcastHashJoin for the anti
+    join; the self-join branch, when present, adds a SortMergeJoin.
+    The broadcast hint keeps the static planner from picking a
+    SortMergeJoin for the anti join, which would shuffle the whole
+    stream; hot keys are few by nature (at most rows / bound).
+    ``stream`` is evaluated by the count, the collect and the self-join
+    branch, so it must be deterministic.
+    """
+    bound = _HOT_GROUP_CAP if cap is None else min(cap, _HOT_GROUP_CAP)
+    n = F.col("count")
+    counts = stream.groupBy(*keys).count()
+    hot = F.broadcast(counts.filter(n > bound).select(*keys))
+    occ = F.struct(*payload)
+    v = F.col("__v")
+    combos = F.flatten(
+        F.transform(
+            v,
+            lambda x, i: F.transform(
+                F.slice(v, i + 2, F.size(v) - i - 1),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+    pairs = (
+        stream.join(hot, keys, "left_anti")
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(occ)).alias("__v"))
+        .filter(F.size(v) >= 2)
+        .select(F.inline(combos))
+    )
+    if cap is None or cap > _HOT_GROUP_CAP:
+        mid = hot if cap is None else F.broadcast(
+            counts.filter((n > bound) & (n <= cap)).select(*keys)
+        )
+        ja = stream.join(mid, keys, "left_semi").select(*keys, occ.alias("a"))
+        jb = ja.select(
+            *[F.col(k).alias("__b" + k) for k in keys], F.col("a").alias("b")
+        )
+        on = F.col("a") < F.col("b")
+        for k in keys:
+            on = on & (F.col(k) == F.col("__b" + k))
+        pairs = pairs.unionByName(ja.join(jb, on, "inner").select("a", "b"))
+    return pairs
+
+
 def fingerprint_overlap_join(
     df: DataFrame,
     id_col: str,
@@ -1647,23 +1718,14 @@ def fingerprint_overlap_join(
     bounds the worst-case join fan-out (skew guard); ``None`` keeps
     the join exact over all fingerprints.
 
-    Plan shape (capped, the recommended form): per-row fingerprint
-    projection (no shuffle), explode to an inverted index, a map-side-
-    combinable count per fingerprint finds the HOT keys (df above
-    ``min(max_df, _HOT_GROUP_CAP)``), the collect aggregation runs
-    behind a left-anti join against them — so no collected occurrence
-    list ever exceeds that bound, regardless of corpus-wide key
-    frequency — and ordered in-group combinations replay exactly the
-    join's ``id_a < id_b`` pairs.  Fingerprints with df in
-    ``(_HOT_GROUP_CAP, max_df]`` (only possible when the cap exceeds
-    the row-memory guard) go through the AQE-splittable self-join and
-    the two pair streams are unioned before the shared-count
-    aggregation.  With ``max_df=None`` the exact uncapped form keeps
-    the self-equi-join for every key.  Work is proportional to sum
-    over fingerprints of df^2 — bounded by ``max_df`` — never corpus
-    rows².  Rows with a NULL id are dropped up front (the join form's
-    ``id_a < id_b`` never matched them; the collected form keeps the
-    same contract explicitly).
+    Capped, the pairs come from the hot-key-guarded in-group pairing
+    of ``_guarded_pairs`` (per-doc fingerprints are distinct, so its
+    pairs are exactly the self-join's); uncapped, from a checkpointed
+    self-equi-join.  Work is proportional to the sum over fingerprints
+    of df^2 — bounded by ``max_df`` — never corpus rows².  The capped
+    form evaluates ``df`` more than once, so it must be deterministic
+    (``localCheckpoint()`` nondeterministic sources first).  Rows with
+    a NULL id are dropped up front.
 
     Returns ``(id_a, id_b, shared_fps)`` with ``id_a < id_b``.
     """
@@ -1684,100 +1746,26 @@ def fingerprint_overlap_join(
         )
     )
     if max_df is not None:
-        # r11 turned the capped self-equi-join into one hash
-        # aggregation (per-doc fingerprints are DISTINCT, so ordered
-        # in-group combinations of the sorted doc list replay exactly
-        # the join's (id_a < id_b) rows).  r12 re-guard (ADVICE r11
-        # high): the r11 form collected the FULL occurrence list and
-        # only then filtered on its size, so a corpus-wide boilerplate
-        # fingerprint — the exact rows max_df exists to drop —
-        # materialized an unbounded array on one reducer row.  Now a
-        # count aggregation (map-side combinable, key-sized shuffle)
-        # finds the hot fingerprints first and the collect runs behind
-        # a left-anti join against them: no collected list exceeds
-        # min(max_df, _HOT_GROUP_CAP).  Keys the cap KEEPS above the
-        # row-memory guard (df in (_HOT_GROUP_CAP, max_df]) pair via
-        # the AQE-splittable self-join below.  The count pass
-        # re-evaluates the fingerprint projection (map-only,
-        # embarrassingly parallel — cheaper than materializing the
-        # exploded index, per the r11 checkpoint A/B), so df must be
-        # deterministic, same as the uncapped join form.
-        bound = min(max_df, _HOT_GROUP_CAP)
-        # ONE explicit exchange on the fingerprint feeds the count
-        # pre-pass, the anti-joined collect and the hot self-join:
-        # identical subtrees, so ReuseExchange shuffle-writes the
-        # inverted index ONCE and each pass local-reads it (§2.4).
-        fpr = fps.repartition("__fp")
-        # count(__id) == count(1) here (__id is filtered non-NULL
-        # upstream) but keeps __id referenced, so this branch's copy
-        # of the exchange canonicalizes equal to the collect branch's
-        # and AQE reuses ONE shuffle of the inverted index (pruned to
-        # bare keys it would shuffle-write twice — measured on the
-        # substrings twin).
-        counts = fpr.groupBy("__fp").agg(F.count("__id").alias("__n"))
-        # broadcast hint: without it the static planner picks an SMJ
-        # for the anti join and shuffle-writes the full fingerprint
-        # stream before AQE can downgrade it.  Hot keys are corpus-wide
-        # boilerplate — few by nature (bounded by rows/bound, tiny in
-        # any non-pathological corpus), so the build side is hint-safe.
-        hot = F.broadcast(counts.filter(F.col("__n") > bound).select("__fp"))
-        groups = (
-            fpr.join(hot, "__fp", "left_anti")
-            .groupBy("__fp")
-            .agg(F.sort_array(F.collect_list("__id")).alias("__v"))
-            .filter(F.size("__v") >= 2)
+        pairs = _guarded_pairs(fps, ["__fp"], ["__id"], max_df).select(
+            F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")
         )
-        v = F.col("__v")
-        combos = F.flatten(
-            F.transform(
-                v,
-                lambda x, i: F.transform(
-                    F.slice(v, i + 2, F.size(v) - i - 1),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
-            )
+    else:
+        # uncapped, every pair is in the output and the plain join
+        # spreads a hot fingerprint's pairs over reducers without the
+        # guard's count and collect passes; checkpointed because the
+        # hashing feeds both sides
+        fpsc = fps.localCheckpoint(eager=True)
+        fa = fpsc.select(F.col("__id").alias("id_a"), "__fp")
+        fb = fpsc.select(
+            F.col("__id").alias("id_b"), F.col("__fp").alias("__fp_b")
         )
-        pairs = groups.select(F.explode(combos).alias("__p")).select(
-            F.col("__p.a").alias("id_a"), F.col("__p.b").alias("id_b")
-        )
-        if max_df > _HOT_GROUP_CAP:
-            mid = F.broadcast(
-                counts.filter(
-                    (F.col("__n") > bound) & (F.col("__n") <= max_df)
-                ).select("__fp")
-            )
-            msh = fpr.join(mid, "__fp", "left_semi")
-            ja = msh.select(F.col("__id").alias("id_a"), "__fp")
-            jb = msh.select(
-                F.col("__id").alias("id_b"), F.col("__fp").alias("__fp_b")
-            )
-            pairs = pairs.unionByName(
-                ja.join(
-                    jb,
-                    (ja["__fp"] == jb["__fp_b"]) & (ja["id_a"] < jb["id_b"]),
-                    "inner",
-                ).select("id_a", "id_b")
-            )
-        return (
-            pairs.groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("shared_fps"))
-            .filter(F.col("shared_fps") >= min_shared)
-        )
-    # max_df=None: an uncapped fingerprint's occurrence list is
-    # frequency-sized — collecting it onto one reducer row is a new
-    # OOM hazard the AQE-splittable join does not have, so the exact
-    # uncapped form keeps the join (checkpointed: the hashing feeds
-    # both sides).
-    fpsc = fps.localCheckpoint(eager=True)
-    fa = fpsc.select(F.col("__id").alias("id_a"), "__fp")
-    fb = fpsc.select(F.col("__id").alias("id_b"), F.col("__fp").alias("__fp_b"))
-    return (
-        fa.join(
+        pairs = fa.join(
             fb,
             (fa["__fp"] == fb["__fp_b"]) & (fa["id_a"] < fb["id_b"]),
             "inner",
-        )
-        .groupBy("id_a", "id_b")
+        ).select("id_a", "id_b")
+    return (
+        pairs.groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
@@ -2031,13 +2019,11 @@ def dedup_substrings(
     How (all DataFrame ops, no UDF): tokenize on whitespace; emit one
     ``min_tokens``-gram shingle per position as TWO independent 64-bit
     hashes (the string itself is dropped before the shuffle — 16 bytes
-    per position instead of ~6 bytes x min_tokens); ONE hash
-    aggregation on the 128-bit hash pair collects each shingle's
-    (id, pos) occurrence list, singleton groups are dropped, and
-    ordered in-group combinations replay exactly the pair set a
-    self-equi-join would emit; merge runs of consecutive matching
-    positions at constant offset into maximal spans with a
-    gaps-and-islands window per (doc_a, doc_b, offset).  A span of
+    per position instead of ~6 bytes x min_tokens); pair every two
+    positions that share the 128-bit hash pair; merge runs of
+    consecutive matching positions at constant offset into maximal
+    spans with a gaps-and-islands window per (doc_a, doc_b, offset).
+    A span of
     L >= min_tokens duplicated tokens yields L - min_tokens + 1
     consecutive matching shingles, so maximal spans are recovered
     exactly; 128-bit hashing makes a false match vanishingly
@@ -2045,20 +2031,13 @@ def dedup_substrings(
     through the shuffle.
 
     Scale plan: the shingle projection is per-row (no shuffle); the
-    ONE group-by exchange moves 16-byte keys + (id, pos) — about
-    1.25x the corpus bytes at 50-token grain, flat in doc count (the
-    former self-join moved it twice and sorted both sides).
-    Candidate work is proportional to DUPLICATED positions, never
-    rows².  The one quadratic hazard is a boilerplate shingle
-    repeated in f places -> f^2/2 pairs on one key (identical under
-    the old join): ``max_occurrences`` drops shingles seen more than
-    that many times — a map-side-combinable count pre-pass whose hot
-    keys the collect aggregation anti-joins away, so no collected row
-    exceeds ``min(max_occurrences, _HOT_GROUP_CAP)`` entries; keys
-    above the row-memory guard that the cap keeps (or every hot key
-    when uncapped) pair through an AQE-splittable self-join instead —
-    the same frequency cut Lee et al. apply to pathological repeats;
-    at 100 TB set it to a few thousand.  Under a cap, spans
+    pairing is the hot-key-guarded ``_guarded_pairs``, whose exchanges
+    move 16-byte keys + (id, pos).  Candidate work is proportional to
+    DUPLICATED positions, never rows².  The one quadratic hazard is a
+    boilerplate shingle repeated in f places -> f^2/2 pairs on one
+    key: ``max_occurrences`` drops shingles seen more than that many
+    times — the same frequency cut Lee et al. apply to pathological
+    repeats; at 100 TB set it to a few thousand.  Under a cap, spans
     covered only by dropped shingles are not reported, and a span
     whose MIDDLE shingles are dropped (its interior k-gram is itself
     hot boilerplate) is reported FRACTURED into the sub-spans the
@@ -2067,10 +2046,9 @@ def dedup_substrings(
     truncation).  The islands window partitions by
     (doc pair, offset): its partition size is bounded by a single
     document's length, not by corpus-wide key frequency, so no hot
-    reducer.  The count pre-pass and the collect pass each evaluate
-    the shingle stream, so ``df`` must be deterministic
-    (``localCheckpoint()`` nondeterministic sources first).
-    Partitioning caveat: the shingle
+    reducer.  The shingle stream is evaluated more than once, so ``df``
+    must be deterministic (``localCheckpoint()`` nondeterministic sources
+    first).  Partitioning caveat: the shingle
     posexplode amplifies each row ~``n_tokens``-fold WITHOUT a shuffle,
     so an input that arrives in few partitions (e.g. the output of a
     broadcast join over a small table) serializes the amplified stage
@@ -2081,148 +2059,16 @@ def dedup_substrings(
     if min_tokens < 2:
         raise ValueError("min_tokens must be >= 2")
     sh = _substring_shingles(df, id_col, text_col, min_tokens, hash_seed)
-    # r11 optimization (guide §2.4: remove shuffles outright): the
-    # former self-equi-join on (__h1, __h2) shuffled the shingle
-    # stream TWICE (one exchange + sort per side) and — because the
-    # per-side aliases defeat exchange reuse — evaluated the whole
-    # shingle build (tokenize + k-gram concat + double xxhash64)
-    # twice.  ONE hash aggregation on the same keys produces the
-    # identical pair set: collect the (id, pos) occurrence list per
-    # 128-bit hash, drop singleton groups (they cannot pair — the
-    # overwhelming majority of shingles), and emit ordered
-    # combinations i < j of the sorted list, which satisfy exactly
-    # the old join predicate (ida < idb) | (ida == idb & pa < pb).
-    # r12 re-guard (VERDICT r11 item 1): the r11 form collected the
-    # occurrence list for EVERY key, so one corpus-wide boilerplate
-    # shingle put an f-entry list plus an f^2/2-struct combos array on
-    # a single reducer row — unbounded at 100 TB, where the old join's
-    # f^2/2 output ROWS were at least AQE-splittable.  Now a count
-    # aggregation (map-side combinable, key-sized shuffle) finds the
-    # HOT keys (occurrences above min(max_occurrences, _HOT_GROUP_CAP))
-    # first; the collect aggregation runs behind a left-anti join
-    # against them, so no collected row exceeds that bound, and the
-    # hot keys that survive the cap pair through the AQE-splittable
-    # self-join, the two pair streams unioning BEFORE the span merge
-    # (one doc pair's shingles can straddle both branches).  When no
-    # hot key exists the anti join is a pass-through and the join
-    # branch an empty relation — AQE eliminates both at runtime, so
-    # the common case keeps the r11 single-aggregation plan plus only
-    # the count pre-pass.  The count pass re-evaluates the shingle
-    # build (map-only, embarrassingly parallel — cheaper than
-    # materializing the exploded stream, per the r11 checkpoint A/B),
-    # so ``df`` must be deterministic — ``localCheckpoint()``
-    # nondeterministic sources first, the same rule the pre-r11 join
-    # form documented.
-    bound = (
-        min(max_occurrences, _HOT_GROUP_CAP)
-        if max_occurrences is not None
-        else _HOT_GROUP_CAP
+    # the pair streams union BEFORE the span merge: one doc pair's
+    # shingles can straddle the in-group and self-join branches
+    pairs = _guarded_pairs(
+        sh, ["__h1", "__h2"], ["__id", "__pos"], max_occurrences
+    ).select(
+        F.col("a.__id").alias("__ida"),
+        F.col("b.__id").alias("__idb"),
+        F.col("a.__pos").alias("__pa"),
+        (F.col("b.__pos") - F.col("a.__pos")).alias("__delta"),
     )
-    # ONE explicit exchange on the group key feeds every consumer
-    # below (count pre-pass, anti-joined collect, hot-key self-join):
-    # the subtrees are identical, so ReuseExchange/AQE stage reuse
-    # shuffle-writes the shingle stream ONCE and each pass local-reads
-    # it — the same §2.4 move as repartition-then-groupBy.  (Separate
-    # groupBys would each plant their own exchange with differing
-    # partial aggregates inside, defeating reuse and re-evaluating the
-    # shingle build per pass.)  Key-partitioned reads stream through
-    # count/filter without buffering, so a hot key never concentrates
-    # in an aggregation buffer — only in an exchange partition, which
-    # is read sequentially.
-    shr = sh.repartition("__h1", "__h2")
-    # count(when(pos >= 0, id)) == count(1) here (posexplode positions
-    # are >= 0 by construction, ids filtered non-NULL upstream), but
-    # unlike count(1) it keeps both payload columns referenced, so the
-    # optimizer cannot column-prune this branch's copy of the exchange
-    # down to bare keys — pruned, the two exchange subtrees stop
-    # canonicalizing equal and AQE shuffle-writes the shingle stream
-    # twice instead of reusing one stage (measured; count(struct(..))
-    # gets rewritten to count(1) and prunes anyway).
-    counts = shr.groupBy("__h1", "__h2").agg(
-        F.count(F.when(F.col("__pos") >= 0, F.col("__id"))).alias("__n")
-    )
-    # broadcast hint: without it the static planner picks an SMJ for
-    # the anti join and shuffle-writes the full shingle stream a
-    # second time before AQE can downgrade it.  Hot keys are
-    # corpus-wide boilerplate — few by nature (bounded by
-    # positions/bound), so the build side is hint-safe at any scale
-    # the operator itself survives.
-    hot = F.broadcast(
-        counts.filter(F.col("__n") > bound).select("__h1", "__h2")
-    )
-    occ = F.sort_array(
-        F.collect_list(F.struct(F.col("__id"), F.col("__pos")))
-    )
-    groups = (
-        shr.join(hot, ["__h1", "__h2"], "left_anti")
-        .groupBy("__h1", "__h2")
-        .agg(occ.alias("__v"))
-        .filter(F.size("__v") >= 2)
-    )
-    v = F.col("__v")
-    combos = F.flatten(
-        F.transform(
-            v,
-            lambda x, i: F.transform(
-                F.slice(v, i + 2, F.size(v) - i - 1),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    pairs = (
-        groups.select(F.explode(combos).alias("__p"))
-        .select(
-            F.col("__p.a.__id").alias("__ida"),
-            F.col("__p.b.__id").alias("__idb"),
-            F.col("__p.a.__pos").alias("__pa"),
-            (F.col("__p.b.__pos") - F.col("__p.a.__pos")).alias("__delta"),
-        )
-    )
-    if max_occurrences is None or max_occurrences > _HOT_GROUP_CAP:
-        if max_occurrences is None:
-            mid = hot  # same plan object -> one broadcast build
-        else:
-            mid = F.broadcast(
-                counts.filter(
-                    (F.col("__n") > bound)
-                    & (F.col("__n") <= max_occurrences)
-                ).select("__h1", "__h2")
-            )
-        msh = shr.join(mid, ["__h1", "__h2"], "left_semi")
-        ja = msh.select(
-            F.col("__id").alias("__ida_j"),
-            F.col("__pos").alias("__pa_j"),
-            "__h1",
-            "__h2",
-        )
-        jb = msh.select(
-            F.col("__id").alias("__idb_j"),
-            F.col("__pos").alias("__pb_j"),
-            F.col("__h1").alias("__h1b"),
-            F.col("__h2").alias("__h2b"),
-        )
-        jp = (
-            ja.join(
-                jb,
-                (F.col("__h1") == F.col("__h1b"))
-                & (F.col("__h2") == F.col("__h2b"))
-                & (
-                    (F.col("__ida_j") < F.col("__idb_j"))
-                    | (
-                        (F.col("__ida_j") == F.col("__idb_j"))
-                        & (F.col("__pa_j") < F.col("__pb_j"))
-                    )
-                ),
-                "inner",
-            )
-            .select(
-                F.col("__ida_j").alias("__ida"),
-                F.col("__idb_j").alias("__idb"),
-                F.col("__pa_j").alias("__pa"),
-                (F.col("__pb_j") - F.col("__pa_j")).alias("__delta"),
-            )
-        )
-        pairs = pairs.unionByName(jp)
     return _substring_spans(pairs, min_tokens)
 
 

@@ -953,6 +953,77 @@ def test_dedup_substrings_null_ids_dropped(spark):
     assert got == want and want
 
 
+@pytest.mark.parametrize(
+    "keys, payload",
+    [(["__fp"], ["__id"]), (["__h1", "__h2"], ["__id", "__pos"])],
+)
+@pytest.mark.parametrize("cap", [None, 2, 5])
+def test_guarded_pairs_matches_brute_force_at_guard_edges(
+    spark, monkeypatch, keys, payload, cap
+):
+    # the shared pairing helper of fingerprint_overlap_join and
+    # dedup_substrings, with the guard shrunk to 3: one key at exactly
+    # the collect bound (in-group pairing), one at bound + 1 (self-join
+    # branch when the cap keeps it, dropped otherwise), one at cap
+    # (kept) and one at cap + 1 (dropped), plus a singleton
+    import itertools
+    from collections import defaultdict
+
+    import pandance_spark.operators.dedup as dd
+
+    monkeypatch.setattr(dd, "_HOT_GROUP_CAP", 3)
+    bound = 3 if cap is None else min(cap, 3)
+    counts = {1, bound, bound + 1} | ({cap, cap + 1} if cap else set())
+    rows = []
+    for key, c in enumerate(sorted(counts)):
+        for j in range(c):
+            # two-field payloads repeat ids, so the pair order must
+            # fall through to __pos; ids also run against input order
+            pay = (c - j,) if len(payload) == 1 else (j // 2, c - j)
+            rows.append((key,) * len(keys) + pay)
+    stream = spark.createDataFrame(
+        rows, ", ".join(f"{c} long" for c in keys + payload)
+    )
+    got = sorted(
+        (tuple(r["a"]), tuple(r["b"]))
+        for r in dd._guarded_pairs(stream, keys, payload, cap).collect()
+    )
+    groups = defaultdict(list)
+    for r in rows:
+        groups[r[: len(keys)]].append(r[len(keys):])
+    want = sorted(
+        pair
+        for occ in groups.values()
+        if cap is None or len(occ) <= cap
+        for pair in itertools.combinations(sorted(occ), 2)
+    )
+    assert got == want and want
+
+
+def test_capped_dedup_joins_plan_shape(spark):
+    # the hot-key anti join stays a broadcast (no SortMergeJoin that
+    # would shuffle the whole stream), and the capped plans keep the
+    # guard's two key-hash exchanges plus the operator's own one
+    from pandance_spark.operators.dedup import (
+        dedup_substrings,
+        fingerprint_overlap_join,
+    )
+    from pandance_spark.plans import plan_report
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f g h"), (2, "x a b c d e f g h")],
+        "id long, text string",
+    )
+    for out in (
+        fingerprint_overlap_join(df, "id", "text", k=4, mod=2, max_df=4),
+        dedup_substrings(df, "id", "text", min_tokens=4, max_occurrences=4),
+    ):
+        rep = plan_report(out)
+        assert rep["sort_merge_joins"] == 0, rep
+        assert rep["broadcast_hash_joins"] == 1, rep
+        assert rep["exchanges"] == 3, rep
+
+
 def test_contamination_spans_cross_corpus(spark):
     from pandance_spark.operators.dedup import contamination_spans
 
