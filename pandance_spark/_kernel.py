@@ -67,6 +67,9 @@ __all__ = [
     "is_numeric_type",
     "is_timestamp_type",
     "as_instant",
+    "numeric_view",
+    "sql_literal",
+    "band_id",
     "spread_partitions",
     "likely_shuffle_join",
     "sampled_hot_keys",
@@ -107,6 +110,51 @@ def as_instant(col: Column) -> Column:
     source family, so the interpretation cancels.
     """
     return col.cast(T.TimestampType())
+
+
+def numeric_view(col: Column, dtype: T.DataType) -> Column:
+    """Orderable numeric view of a numeric or timestamp column: epoch
+    microseconds for timestamps and dates, else the value as double —
+    what the band planners quantile and band on."""
+    if is_timestamp_type(dtype):
+        return F.unix_micros(as_instant(col))
+    return col.cast("double")
+
+
+def sql_literal(v) -> str:
+    """Exact Spark SQL text for a cut value.  A double is its shortest
+    round-trip ``repr`` cast from a string (which also spells
+    ``inf``/``-inf``/``nan``); a string is its UTF-8 bytes as a hex
+    literal cast to STRING, so no quoting or escape rule applies."""
+    if isinstance(v, float):  # float(): numpy's repr is not the value
+        return f"CAST('{float(v)!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        return f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
+    raise TypeError(f"unsupported cut value type: {type(v).__name__}")
+
+
+def band_id(df: DataFrame, value: Column, cuts, name: str) -> DataFrame:
+    """Add column ``name`` = the number of ``cuts`` that are <= ``value``
+    — ``bisect.bisect_right(cuts, value)`` for sorted cuts, under
+    Spark's ordering (NaN sorts above every double, so it lands in band
+    ``len(cuts)``).  ``cuts`` are Python floats or strs.
+
+    A flat sum of CASE WHENs stays inside whole-stage codegen; it is
+    deliberately NOT a higher-order function (outer-column references
+    inside lambda bodies break Catalyst's constraint inference across
+    the join).  It is ONE ``F.expr``, so a plan costs a fixed number of
+    driver calls however many cuts there are, where the Column API pays
+    several py4j round trips per cut.  Only the cuts become SQL text:
+    ``value`` stays a Column, placed in ``name`` and read back from
+    there, because a timestamp view spelt as SQL would re-resolve
+    ``timestamp`` under ``spark.sql.timestampType`` (see
+    :func:`as_instant`).
+    """
+    ref = "`" + name.replace("`", "``") + "`"
+    terms = "".join(
+        f" + CASE WHEN {ref} >= {sql_literal(c)} THEN 1 ELSE 0 END" for c in cuts
+    )
+    return df.withColumn(name, value).withColumn(name, F.expr("0" + terms))
 
 
 def spread_partitions(df: DataFrame, cap: int = None) -> DataFrame:
@@ -151,12 +199,7 @@ def spread_partitions(df: DataFrame, cap: int = None) -> DataFrame:
             plan_str,
         ):
             return df
-        try:
-            sz = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            sz = 0
+        sz = plan_size_bytes(df) or 0
         max_pb = parse_bytes_conf(
             df.sparkSession, "spark.sql.files.maxPartitionBytes", 128 << 20
         )
@@ -175,9 +218,10 @@ def plan_size_bytes(df: DataFrame):
     """Catalyst size estimate of the optimized plan, in bytes (no job
     runs); ``None`` when statistics are unavailable.  The ONE home of
     the private ``queryExecution().optimizedPlan().stats()`` py4j
-    chain — strategy pickers (ineq/fuzzy), the GEMM gate (dedup) and
-    output-partition planning (layout) all call this, so a Spark
-    upgrade that moves the API breaks exactly one site."""
+    chain — strategy pickers, the broadcast gate of the skew machinery,
+    the scan spreader, the GEMM gate (dedup) and output-partition
+    planning (layout) all call this, so a Spark upgrade that moves the
+    API breaks exactly one site."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -200,6 +244,30 @@ def parse_bytes_conf(spark, key: str, default: int) -> int:
         return default
 
 
+# Max bytes of the SMALLER side for which a nested-loop join is still
+# sane.  Deliberately much stricter than autoBroadcastJoinThreshold:
+# broadcast feasibility (ship 10 MB) is not nested-loop feasibility
+# (compare EVERY pair against it) — a 10 MB side is ~100k rows, and
+# 100k x 1M comparisons is already a 1e11 disaster.  ~256 KB keeps the
+# nested-loop path for genuine dimension tables (a few thousand rows).
+BNL_MAX_BYTES = 256 * 1024
+
+
+def nested_loop_sized(left: DataFrame, right: DataFrame) -> bool:
+    """True when the smaller side's Catalyst size estimate (no job) is
+    within ``min(autoBroadcastJoinThreshold, BNL_MAX_BYTES)`` — the
+    test the strategy pickers of the band joins (ineq, fuzzy, overlap)
+    use to prefer a plain conditional (nested-loop) join over their
+    band plan.  Missing statistics count as big."""
+    thr = parse_bytes_conf(
+        left.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 << 20
+    )
+    lsz, rsz = plan_size_bytes(left), plan_size_bytes(right)
+    if lsz is None or rsz is None:
+        return False
+    return min(lsz, rsz) <= max(min(thr, BNL_MAX_BYTES), 0)
+
+
 def likely_shuffle_join(left: DataFrame, right: DataFrame) -> bool:
     """True when a join of these frames is expected to SHUFFLE — i.e.
     neither side's Catalyst size estimate fits under
@@ -212,15 +280,10 @@ def likely_shuffle_join(left: DataFrame, right: DataFrame) -> bool:
     )
     if thr <= 0:
         return True
-    sizes = []
-    for df in (left, right):
-        try:
-            sizes.append(
-                int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            )
-        except Exception:
-            return True
-    return min(sizes) > thr
+    lsz, rsz = plan_size_bytes(left), plan_size_bytes(right)
+    if lsz is None or rsz is None:
+        return True
+    return min(lsz, rsz) > thr
 
 
 def sampled_hot_keys(
@@ -268,7 +331,7 @@ def sampled_hot_keys(
     return hot
 
 
-def two_sided_minmax(left: DataFrame, lval, right: DataFrame, rval):
+def two_sided_minmax(left: DataFrame, lval, right: DataFrame, rval, rextra=None):
     """(min, max) of a join column on each side in ONE Spark job.
 
     Tag + union + grouped agg: still two scans, but a single job
@@ -278,28 +341,34 @@ def two_sided_minmax(left: DataFrame, lval, right: DataFrame, rval):
     analyzer widens mixed-but-comparable numeric/decimal types; if the
     types don't unify we fall back to two separate aggregations.
 
+    ``rextra`` adds one more aggregate over the RIGHT side to the same
+    job: a ``(value, agg)`` pair of a right-side Column and a function
+    from a Column to an aggregate Column (ineq's quantile cuts).
+
     Returns ``(lstat, rstat)`` where each is a dict with ``lo``/``hi``
-    (``None`` values when that side has no non-null rows).
+    (``None`` values when that side has no non-null rows); with
+    ``rextra``, ``rstat["extra"]`` holds its result.
     """
-    empty = {"lo": None, "hi": None}
+    lcols = [lval.alias("__v"), F.lit(0).alias("__s")]
+    rcols = [rval.alias("__v"), F.lit(1).alias("__s")]
+    aggs = [F.min("__v").alias("lo"), F.max("__v").alias("hi")]
+    if rextra is not None:
+        xval, xagg = rextra
+        lcols.append(F.lit(None).alias("__x"))
+        rcols.append(xval.alias("__x"))
+        aggs.append(xagg(F.col("__x")).alias("extra"))
+    empty = {"lo": None, "hi": None, "extra": None}
     try:
-        u = left.select(lval.alias("__v"), F.lit(0).alias("__s")).unionByName(
-            right.select(rval.alias("__v"), F.lit(1).alias("__s"))
-        )
-        rows = (
-            u.groupBy("__s")
-            .agg(F.min("__v").alias("lo"), F.max("__v").alias("hi"))
-            .collect()
-        )
-        stats = {r["__s"]: {"lo": r["lo"], "hi": r["hi"]} for r in rows}
+        u = left.select(*lcols).unionByName(right.select(*rcols))
+        rows = u.groupBy("__s").agg(*aggs).collect()
+        stats = {r["__s"]: {**empty, **r.asDict()} for r in rows}
         return stats.get(0, empty), stats.get(1, empty)
     except Exception:
-        lrow = left.agg(F.min(lval).alias("lo"), F.max(lval).alias("hi")).first()
-        rrow = right.agg(F.min(rval).alias("lo"), F.max(rval).alias("hi")).first()
-        return (
-            {"lo": lrow["lo"], "hi": lrow["hi"]},
-            {"lo": rrow["lo"], "hi": rrow["hi"]},
-        )
+        # the types don't unify: at analysis, or under ANSI at run time
+        # (int vs string widens to a cast that fails on the first row)
+        lrow = left.select(lcols[0]).agg(*aggs[:2]).first()
+        rrow = right.select(rcols[0], *rcols[2:]).agg(*aggs).first()
+        return {**empty, **lrow.asDict()}, {**empty, **rrow.asDict()}
 
 
 def resolve_join_columns(

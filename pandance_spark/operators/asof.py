@@ -21,8 +21,10 @@ Spark-first plan — the **union + running last_value trick**, no UDFs:
 Cost: ONE shuffle (hash by ``by``, sort within) — identical shape to a
 sort-merge join, no replication.  Without ``by`` keys a single window
 partition would serialize, so the rows are range-bucketed by time
-quantiles and a tiny per-bucket "carry" table (the last right row of
-every earlier bucket) is broadcast back — still one data shuffle.
+quantiles (the bucket id is one SQL expression,
+:func:`pandance_spark._kernel.band_id`) and a tiny per-bucket "carry"
+table (the last right row of every earlier bucket) is broadcast back —
+still one data shuffle.
 """
 
 from __future__ import annotations
@@ -35,8 +37,9 @@ from pyspark.sql import types as T
 
 from pandance_spark._kernel import QUANTILE_UNSUPPORTED as _QUANTILE_UNSUPPORTED
 from pandance_spark._kernel import (
-    as_instant,
+    band_id,
     is_timestamp_type,
+    numeric_view,
     resolve_join_columns,
     tolerance_to_micros,
 )
@@ -97,7 +100,7 @@ def asof_join(
     rtype = right2.schema[rts].dataType
 
     def _ord(col: Column, dt: T.DataType) -> Column:
-        v = F.unix_micros(as_instant(col)) if is_timestamp_type(dt) else col.cast("double")
+        v = numeric_view(col, dt)
         return -v if direction == "forward" else v
 
     rpayload_cols = [c for c in right2.columns if c not in by]
@@ -150,19 +153,10 @@ def asof_join(
 
     out = matched.filter(F.col("__tag") == 1)
     if want_fwd:
-        lnum = (
-            F.unix_micros(as_instant(F.col(f"__l.{lts}")))
-            if is_timestamp_type(ltype)
-            else F.col(f"__l.{lts}").cast("double")
-        )
+        lnum = numeric_view(F.col(f"__l.{lts}"), ltype)
 
         def _rnum(match_col: str) -> Column:
-            c = F.col(f"{match_col}.{rts}")
-            return (
-                F.unix_micros(as_instant(c))
-                if is_timestamp_type(rtype)
-                else c.cast("double")
-            )
+            return numeric_view(F.col(f"{match_col}.{rts}"), rtype)
 
         bdist = F.abs(lnum - _rnum("__match"))
         fdist = F.abs(lnum - _rnum("__match_f"))
@@ -179,16 +173,8 @@ def asof_join(
             if is_timestamp_type(ltype)
             else float(tolerance)
         )
-        lval = (
-            F.unix_micros(as_instant(F.col(f"__l.{lts}")))
-            if is_timestamp_type(ltype)
-            else F.col(f"__l.{lts}").cast("double")
-        )
-        rval = (
-            F.unix_micros(as_instant(F.col(f"__match.{rts}")))
-            if is_timestamp_type(rtype)
-            else F.col(f"__match.{rts}").cast("double")
-        )
+        lval = numeric_view(F.col(f"__l.{lts}"), ltype)
+        rval = numeric_view(F.col(f"__match.{rts}"), rtype)
         out = out.withColumn(
             "__match",
             F.when(F.abs(lval - rval) <= F.lit(tol), F.col("__match")),
@@ -205,8 +191,9 @@ def _bucketed_running_last(
     union: DataFrame, num_buckets: int, want_fwd: bool = False
 ) -> DataFrame:
     """Running last-right-row without `by` keys: range-bucket by time
-    quantiles so the window parallelizes, then carry each bucket's
-    final right row forward via a tiny broadcast table.
+    quantiles (``band_id`` over the cuts) so the window parallelizes,
+    then carry each bucket's final right row forward via a tiny
+    broadcast table.
 
     ``want_fwd`` additionally computes ``__match_f`` — the FIRST right
     row at-or-after each row — with the mirrored construction (first
@@ -237,10 +224,7 @@ def _bucketed_running_last(
                 ),
             )
         return out
-    bucket = F.lit(0)
-    for c in cuts:
-        bucket = bucket + F.when(F.col("__ord") >= c, 1).otherwise(0)
-    b = union.withColumn("__bucket", bucket)
+    b = band_id(union, F.col("__ord"), cuts, "__bucket")
     w = Window.partitionBy("__bucket").orderBy("__ord", "__tag")
     in_bucket = b.withColumn(
         "__match_in",

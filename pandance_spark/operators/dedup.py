@@ -935,10 +935,10 @@ def _vector_table_bytes(df: DataFrame, id_col: str, vec_col: str):
 
     Returns None when nothing is known (callers treat that as big).
     """
-    from pandance_spark.operators.ineq import _plan_size_bytes
+    from pandance_spark._kernel import plan_size_bytes
 
     proj = df.select(id_col, vec_col)
-    sz = _plan_size_bytes(proj)
+    sz = plan_size_bytes(proj)
     if sz is None:
         return None
     file_based = False

@@ -54,17 +54,13 @@ from pandance_spark._kernel import (
     apply_suffixes,
     finite_filter,
     likely_shuffle_join,
+    nested_loop_sized,
     resolve_join_columns,
     sampled_hot_keys,
     tolerance_to_micros,
     two_sided_minmax,
     validate_fuzzy_types,
     validate_tol_value,
-)
-from pandance_spark.operators.ineq import (
-    _BNL_MAX_BYTES,
-    _parse_bytes_conf,
-    _plan_size_bytes,
 )
 
 __all__ = ["fuzzy_join"]
@@ -178,7 +174,10 @@ def fuzzy_join(
             strategy = "range"
 
     if strategy == "auto":
-        strategy = _pick_strategy(left2, right2)
+        # the range form is a nested-loop join — only sane when the
+        # smaller side is dimension-table sized; the band form is a
+        # hash join and safe at any scale
+        strategy = "range" if nested_loop_sized(left2, right2) else "band"
     if strategy == "range" or bucket_width == 0.0:
         # tol == 0 degenerates to an exact equi-join on the value
         if bucket_width == 0.0:
@@ -285,13 +284,13 @@ def _try_fuzzy_fast_path(
     rval: Column,
     tol_cmp,
     out_cols,
-) -> Optional[DataFrame]:
+) -> Tuple[Optional[DataFrame], object]:
     """Range pre-check mirroring the reference's always-on ineq
     short-circuit (``pandance/pandance.py:792-807``) adapted to
     tolerance matching: if the value ranges are further than ``tol``
     apart the result is empty; if the combined span fits within ``tol``
-    every pair matches (full cross product).  Two tiny min/max
-    aggregations — metadata-scale work.  NaN/Inf/NULL are already
+    every pair matches (full cross product).  One min/max aggregate
+    over both sides — metadata-scale work.  NaN/Inf/NULL are already
     filtered.  Returns ``(result_or_None, max_abs_value_or_None)``; the
     second element feeds the band-strategy operating-range check."""
     lstat, rstat = two_sided_minmax(left, lval, right, rval)
@@ -316,20 +315,3 @@ def _try_fuzzy_fast_path(
     except TypeError:
         return None, max_abs
     return None, max_abs
-
-
-def _pick_strategy(left: DataFrame, right: DataFrame) -> str:
-    # the range form is a nested-loop join — only sane when the smaller
-    # side is dimension-table sized (see ineq._BNL_MAX_BYTES); the band
-    # form is a hash join and safe at any scale
-    spark = left.sparkSession
-    threshold = min(
-        _parse_bytes_conf(
-            spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024
-        ),
-        _BNL_MAX_BYTES,
-    )
-    lsz, rsz = _plan_size_bytes(left), _plan_size_bytes(right)
-    if lsz is None or rsz is None:
-        return "band"
-    return "range" if min(lsz, rsz) <= max(threshold, 0) else "band"

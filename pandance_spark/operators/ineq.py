@@ -21,14 +21,19 @@ Strategies
   Catalyst executes it as BroadcastNestedLoopJoin when one side fits the
   broadcast threshold — optimal for small dimensions.
 - ``"band"``: the quantile band join described above — the 100 TB path.
+  For numeric and timestamp keys the cuts are right-side
+  ``percentile_approx`` quantiles, computed in the SAME aggregate as
+  the fast path's min/max; the band id is one SQL expression
+  (:func:`pandance_spark._kernel.band_id`), so the plan costs a fixed
+  number of driver calls and jobs whatever ``num_bands`` is.
 - ``"auto"`` (default): use plan-statistics size estimates; if either
   side is within ``spark.sql.autoBroadcastJoinThreshold`` choose
   ``bnl``, else ``band``.
 
 The reference's disjoint-range fast path (``pandance/pandance.py:792-807``)
 is ON by default (as in the reference, which always short-circuits):
-two tiny min/max aggregations can prove the result is the full cross
-product or empty without doing any matching work.  NOTE (deliberate
+one min/max aggregate over both sides can prove the result is the full
+cross product or empty without doing any matching work.  NOTE (deliberate
 deviation, SURVEY.md §4 quirk 2): both fast paths return the FULL
 suffixed schema, where the reference returns only the two join columns.
 """
@@ -37,20 +42,23 @@ from __future__ import annotations
 
 import math
 import operator
+from bisect import bisect_right
+from functools import partial
 from typing import Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pandance_spark._kernel import QUANTILE_UNSUPPORTED as _QUANTILE_UNSUPPORTED
 from pandance_spark._kernel import (
-    as_instant,
+    sql_literal,
     apply_suffixes,
-    parse_bytes_conf as _parse_bytes_conf,
+    band_id,
     is_numeric_type,
     is_timestamp_type,
     likely_shuffle_join,
+    nested_loop_sized,
+    numeric_view,
     resolve_join_columns,
     two_sided_minmax,
 )
@@ -115,66 +123,65 @@ def ineq_join(
     cond = _OPS[how](left2[lcol], right2[rcol])
     out_cols = [*left2.columns, *right2.columns]
 
+    if strategy == "auto":
+        strategy = _pick_strategy(left2, right2, lcol, rcol)
+    # numeric/timestamp band joins quantile the right side in the SAME
+    # aggregate as the fast path's min/max (or alone without it)
+    rtype = right2.schema[rcol].dataType
+    quantiles = None
+    if (
+        strategy == "band"
+        and _has_numeric_view(left2.schema[lcol].dataType)
+        and _has_numeric_view(rtype)
+    ):
+        quantiles = (
+            numeric_view(F.col(rcol), rtype).cast("double"),
+            partial(_quantile_cuts, num_bands=num_bands),
+        )
+    raw_cuts = None
     if disjoint_fast_path:
-        fast, _lstat, _rstat = _try_disjoint_fast_path(
-            left2, right2, lcol, rcol, how, out_cols
+        fast, raw_cuts = _try_disjoint_fast_path(
+            left2, right2, lcol, rcol, how, out_cols, quantiles
         )
         if fast is not None:
             return fast
+    elif quantiles is not None:
+        value, agg = quantiles
+        raw_cuts = right2.select(agg(value)).collect()[0][0]
 
-    if strategy == "auto":
-        strategy = _pick_strategy(left2, right2, lcol, rcol)
     if strategy == "band":
         banded = _band_join(
-            left2, right2, lcol, rcol, how, num_bands, out_cols,
+            left2, right2, lcol, rcol, how, num_bands, out_cols, raw_cuts,
             skew_salting=skew_salting,
         )
         if banded is not None:
             return banded
-        strategy = "bnl"
     return left2.join(right2, cond, "inner").select(*out_cols)
 
 
-def _plan_size_bytes(df: DataFrame) -> Optional[int]:
-    """Catalyst size estimate of the optimized plan, in bytes (no job).
-    Thin alias over the shared ``_kernel.plan_size_bytes`` (one home
-    for the private py4j chain); kept under this name because fuzzy
-    and dedup import it from here."""
-    from pandance_spark._kernel import plan_size_bytes
-
-    return plan_size_bytes(df)
+def _has_numeric_view(dtype: T.DataType) -> bool:
+    return is_numeric_type(dtype) or is_timestamp_type(dtype)
 
 
-# Max bytes of the SMALLER side for which a nested-loop join is still
-# sane.  Deliberately much stricter than autoBroadcastJoinThreshold:
-# broadcast feasibility (ship 10 MB) is not nested-loop feasibility
-# (compare EVERY pair against it) — a 10 MB side is ~100k rows, and
-# 100k x 1M comparisons is already a 1e11 disaster.  ~256 KB keeps the
-# BNLJ path for genuine dimension tables (a few thousand rows).
-_BNL_MAX_BYTES = 256 * 1024
+def _quantile_cuts(value: Column, num_bands: int) -> Column:
+    """Aggregate: the ``num_bands - 1`` interior quantiles of a double
+    column — exactly ``approxQuantile(probs, 0.001)``: NaN (and NULL)
+    left out, accuracy ``1 / 0.001``.  The probabilities are one SQL
+    array so the plan's driver calls do not grow with ``num_bands``."""
+    probs = ", ".join(sql_literal(i / num_bands) for i in range(1, num_bands))
+    return F.percentile_approx(
+        F.when(~F.isnan(value), value), F.expr(f"array({probs})"), 1000
+    )
 
 
 def _pick_strategy(
     left: DataFrame, right: DataFrame, lcol: str, rcol: str
 ) -> str:
+    """Plan-statistics choice between ``bnl`` and ``band`` (no job)."""
     ltype = left.schema[lcol].dataType
-    if not (
-        is_numeric_type(ltype)
-        or is_timestamp_type(ltype)
-        or isinstance(ltype, T.StringType)
-    ):
+    if not (_has_numeric_view(ltype) or isinstance(ltype, T.StringType)):
         return "bnl"  # band path needs an orderable numeric view
-    spark = left.sparkSession
-    threshold = min(
-        _parse_bytes_conf(
-            spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024
-        ),
-        _BNL_MAX_BYTES,
-    )
-    lsz, rsz = _plan_size_bytes(left), _plan_size_bytes(right)
-    if lsz is None or rsz is None:
-        return "band"
-    return "bnl" if min(lsz, rsz) <= max(threshold, 0) else "band"
+    return "bnl" if nested_loop_sized(left, right) else "band"
 
 
 def _try_disjoint_fast_path(
@@ -184,24 +191,23 @@ def _try_disjoint_fast_path(
     rcol: str,
     how: str,
     out_cols,
-) -> Optional[DataFrame]:
+    rextra=None,
+) -> Tuple[Optional[DataFrame], object]:
     """If the two value ranges don't overlap, the answer is the full
     cross product or empty — metadata-only work.  Mirrors reference
     ``pandance/pandance.py:792-807`` but returns the full suffixed
     schema on both branches (deliberate deviation, SURVEY.md §4).
 
-    Returns ``(result_or_None, lstat, rstat)`` so callers can reuse the
-    min/max stats if a later strategy wants them (the band path
-    currently doesn't — string cuts come from a value sample).
+    Returns ``(result_or_None, extra)``: ``extra`` is the result of the
+    optional right-side aggregate ``rextra`` (see
+    :func:`pandance_spark._kernel.two_sided_minmax`), computed in the
+    same job as the min/max — the band path's quantile cuts.
     """
-    lstat, rstat = two_sided_minmax(left, F.col(lcol), right, F.col(rcol))
+    lstat, rstat = two_sided_minmax(left, F.col(lcol), right, F.col(rcol), rextra)
+    extra = rstat["extra"]
     if lstat["lo"] is None or rstat["lo"] is None:
         # one side empty -> empty result with the full schema
-        return (
-            left.join(right, F.lit(False), "inner").select(*out_cols),
-            lstat,
-            rstat,
-        )
+        return left.join(right, F.lit(False), "inner").select(*out_cols), extra
     # NaN join values: Spark orders NaN ABOVE everything while Python
     # comparisons return False — the driver-side range check would flip
     # results vs the band/bnl paths.  No short-circuit; the join
@@ -210,7 +216,7 @@ def _try_disjoint_fast_path(
         isinstance(v, float) and math.isnan(v)
         for v in (lstat["lo"], lstat["hi"], rstat["lo"], rstat["hi"])
     ):
-        return None, lstat, rstat
+        return None, extra
     op = _OPS[how]
     # worst case pair (hardest to satisfy) vs best case pair (easiest):
     if how in ("<", "<="):
@@ -226,23 +232,11 @@ def _try_disjoint_fast_path(
             left.filter(F.col(lcol).isNotNull())
             .crossJoin(right.filter(F.col(rcol).isNotNull()))
             .select(*out_cols),
-            lstat,
-            rstat,
+            extra,
         )
     if not op(*best):  # even the best pair fails -> empty
-        return (
-            left.join(right, F.lit(False), "inner").select(*out_cols),
-            lstat,
-            rstat,
-        )
-    return None, lstat, rstat
-
-
-def _as_numeric(col: Column, dtype: T.DataType) -> Column:
-    """Quantile-able numeric view of a column (timestamps -> micros)."""
-    if is_timestamp_type(dtype):
-        return F.unix_micros(as_instant(col))
-    return col.cast("double")
+        return left.join(right, F.lit(False), "inner").select(*out_cols), extra
+    return None, extra
 
 
 # driver-side sample cap for string quantile sketching — the same
@@ -271,7 +265,7 @@ def _hot_bands(raw_cuts, cuts) -> dict:
     out: dict = {}
     for v, k in Counter(raw_cuts).items():
         if k >= _AUTOSKEW_MIN_MULT:
-            band = sum(1 for c in cuts if c <= v)
+            band = bisect_right(cuts, v)
             out[band] = min(
                 max(out.get(band, 1), int(k)), _AUTOSKEW_MAX_SALTS
             )
@@ -346,15 +340,18 @@ def _band_join(
     how: str,
     num_bands: int,
     out_cols,
+    raw_cuts=None,
     skew_salting: str = "auto",
 ) -> Optional[DataFrame]:
     """Quantile band join.  Returns None when the band path does not
     apply (non-orderable key, degenerate cuts) so the caller can fall
     back.
 
-    band(v) = #cuts <= v; cuts come from approxQuantile of the right
-    side for numeric/timestamp keys and from a bounded value sample
-    (:func:`_string_cuts`) for string keys.
+    band(v) = #cuts <= v (:func:`pandance_spark._kernel.band_id`).  For
+    numeric/timestamp keys ``raw_cuts`` are the right side's quantiles,
+    which the caller computed in its statistics aggregate
+    (:func:`_quantile_cuts`); string keys cut on a bounded value sample
+    (:func:`_string_cuts`).
     Bands are value-ordered intervals, so for ``<``/``<=`` a pair with
     band_l < band_r is guaranteed to match and only the diagonal needs
     the exact predicate (the distributed analog of the reference's
@@ -362,40 +359,25 @@ def _band_join(
     """
     ltype = left.schema[lcol].dataType
     rtype = right.schema[rcol].dataType
-    # NULL can never satisfy an inequality, but band_of(NULL) = 0 would
+    # NULL can never satisfy an inequality, but band_id(NULL) = 0 would
     # park NULL rows in band 0 where the off-diagonal guaranteed-match
     # shortcut skips the exact predicate — drop them up front.
     left = left.filter(F.col(lcol).isNotNull())
     right = right.filter(F.col(rcol).isNotNull())
-    if (is_numeric_type(ltype) or is_timestamp_type(ltype)) and (
-        is_numeric_type(rtype) or is_timestamp_type(rtype)
-    ):
-        lview = lambda c: _as_numeric(c, ltype)  # noqa: E731
-        rview = lambda c: _as_numeric(c, rtype)  # noqa: E731
+    if _has_numeric_view(ltype) and _has_numeric_view(rtype):
+        lval = numeric_view(F.col(lcol), ltype)
+        rval = numeric_view(F.col(rcol), rtype)
     elif isinstance(ltype, T.StringType) and isinstance(rtype, T.StringType):
         # strings band on sampled value cuts directly (no numeric
         # surrogate — see _string_cuts); band membership then compares
         # in the predicate's own binary string order
-        cuts, raw_cuts = _string_cuts(right, rcol, num_bands, return_raw=True)
-        if not cuts:
-            return None
-        lview = rview = lambda c: c  # noqa: E731
+        _, raw_cuts = _string_cuts(right, rcol, num_bands, return_raw=True)
+        lval, rval = F.col(lcol), F.col(rcol)
     else:
         return None
-    if not isinstance(ltype, T.StringType):
-        probs = [i / num_bands for i in range(1, num_bands)]
-        rnum = right.select(rview(F.col(rcol)).alias("__v")).dropna()
-        try:
-            raw_cuts = rnum.approxQuantile("__v", probs, 0.001)
-        except _QUANTILE_UNSUPPORTED:
-            # "this column cannot be quantiled" -> legitimate band-plan
-            # bail-out; execution errors must PROPAGATE — silently
-            # falling back to the O(n*m) conditional join on a transient
-            # failure would be catastrophic at scale
-            return None
-        cuts = sorted(set(raw_cuts))
-        if not cuts:
-            return None
+    cuts = sorted(set(raw_cuts or ()))
+    if not cuts:
+        return None
     nb = len(cuts)  # band ids in [0, nb]
     hot = {} if skew_salting == "never" else _hot_bands(raw_cuts, cuts)
     if hot and skew_salting == "auto" and not likely_shuffle_join(left, right):
@@ -403,19 +385,8 @@ def _band_join(
         # salt — the machinery would be pure overhead
         hot = {}
 
-    # band id = #cuts <= v, as a flat sum of CASE WHENs (stays inside
-    # whole-stage codegen; deliberately NOT a higher-order function —
-    # outer-column references inside lambda bodies break Catalyst's
-    # constraint inference across the join)
-    def band_of(c: Column, view) -> Column:
-        v = view(c)
-        expr = F.lit(0)
-        for cut in cuts:
-            expr = expr + F.when(v >= F.lit(cut), 1).otherwise(0)
-        return expr
-
-    lb = left.withColumn("__band_l", band_of(F.col(lcol), lview))
-    rb = right.withColumn("__band_r", band_of(F.col(rcol), rview))
+    lb = band_id(left, lval, cuts, "__band_l")
+    rb = band_id(right, rval, cuts, "__band_r")
 
     if _MATCH_HIGHER[how]:
         targets = F.sequence(F.col("__band_l"), F.lit(nb))

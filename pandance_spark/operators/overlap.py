@@ -11,7 +11,9 @@ Spark-first plan — **span banding**:
 
 1. quantile cut points over the right starts define value bands;
 2. every interval explodes to the bands its span covers
-   (``sequence(band(start), band(end))``);
+   (``sequence(band(start), band(end))``), each band id one SQL
+   expression (:func:`pandance_spark._kernel.band_id`), so the plan
+   costs a fixed number of driver calls whatever ``num_bands`` is;
 3. equi-join on band id — overlapping intervals necessarily co-occur in
    the band containing the later of the two starts;
 4. exact overlap predicate, plus a **first-shared-band guard**
@@ -26,12 +28,11 @@ from __future__ import annotations
 
 from typing import Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pandance_spark._kernel import QUANTILE_UNSUPPORTED as _QUANTILE_UNSUPPORTED
-from pandance_spark._kernel import as_instant, is_timestamp_type
+from pandance_spark._kernel import band_id, numeric_view
 
 __all__ = ["overlap_join", "range_lookup", "merge_intervals"]
 
@@ -85,18 +86,11 @@ def overlap_join(
     if strategy != "band":
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    def _num(col: Column, dt: T.DataType) -> Column:
-        if is_timestamp_type(dt):
-            return F.unix_micros(as_instant(col))
-        return col.cast("double")
-
-    lstype = left2.schema[ls].dataType
-    letype = left2.schema[le].dataType
-    rstype = right2.schema[rs].dataType
-    retype = right2.schema[re].dataType
+    def view(df: DataFrame, col: str):
+        return numeric_view(F.col(col), df.schema[col].dataType)
 
     probs = [i / num_bands for i in range(1, num_bands)]
-    rnum = right2.select(_num(F.col(rs), rstype).alias("__v")).dropna()
+    rnum = right2.select(view(right2, rs).alias("__v")).dropna()
     try:
         cuts = sorted(set(rnum.approxQuantile("__v", probs, 0.001)))
     except _QUANTILE_UNSUPPORTED:
@@ -106,19 +100,10 @@ def overlap_join(
     if not cuts:
         return left2.join(right2, overlap, "inner").select(*out_cols)
 
-    def band_of(col: Column, dt: T.DataType) -> Column:
-        v = _num(col, dt)
-        expr = F.lit(0)
-        for c in cuts:
-            expr = expr + F.when(v >= F.lit(c), 1).otherwise(0)
-        return expr
-
-    lb = left2.withColumn("__bs", band_of(F.col(ls), lstype)).withColumn(
-        "__be", band_of(F.col(le), letype)
-    )
-    rb = right2.withColumn("__bs_r", band_of(F.col(rs), rstype)).withColumn(
-        "__be_r", band_of(F.col(re), retype)
-    )
+    lb = band_id(left2, view(left2, ls), cuts, "__bs")
+    lb = band_id(lb, view(left2, le), cuts, "__be")
+    rb = band_id(right2, view(right2, rs), cuts, "__bs_r")
+    rb = band_id(rb, view(right2, re), cuts, "__be_r")
     lb = lb.filter(F.col("__bs") <= F.col("__be")).withColumn(
         "__band", F.explode(F.sequence("__bs", "__be"))
     )

@@ -1728,14 +1728,14 @@ def streaming_ineq_join(
     unchanged (all four operators, NULL drop, suffixes).
 
     The batch quantile band join is stream-legal end-to-end with the
-    static table on the right: cuts come from ONE approxQuantile job
-    on the static side, the stream side computes its band and explodes
-    to its target bands STATELESSLY, and the band equi-join is a plain
-    stream-static inner join (the off-diagonal guaranteed-match
-    shortcut and the fat-band salt both ride along — salting only ever
-    explodes per-row sequences, no state).  The batch disjoint
-    fast path is disabled: it needs min/max jobs on both sides, and a
-    stream cannot be scanned at plan time.
+    static table on the right: cuts come from ONE percentile_approx
+    aggregate on the static side, the stream side computes its band
+    and explodes to its target bands STATELESSLY, and the band
+    equi-join is a plain stream-static inner join (the off-diagonal
+    guaranteed-match shortcut and the fat-band salt both ride along —
+    salting only ever explodes per-row sequences, no state).  The batch
+    disjoint fast path is disabled: it needs min/max jobs on both
+    sides, and a stream cannot be scanned at plan time.
     """
     from pandance_spark.operators.ineq import ineq_join
 

@@ -383,3 +383,47 @@ def test_ineq_band_autoskew_hot_string_key(spark):
                     disjoint_fast_path=False)
     key = ["lid", "rid"]
     assert rows_set(band, key) == rows_set(bnl, key)
+
+
+@pytest.mark.parametrize("fast_path", [True, False])
+def test_ineq_band_build_jobs_and_plan(spark, fast_path):
+    # numeric band cuts come out of ONE statistics aggregate (with the
+    # fast path: the same one as both sides' min/max) — 2 jobs under
+    # AQE, a shuffle-map stage and its result — and the band id is a
+    # flat CASE sum, never a higher-order function, joined on as an
+    # equi-key
+    import re
+
+    left = spark.range(0, 300).selectExpr("id AS v", "id AS lid")
+    right = spark.range(150, 450).selectExpr("id AS v", "id AS rid")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    out = ineq_join(left, right, how="<", on="v", strategy="band",
+                    num_bands=64, disjoint_fast_path=fast_path)
+    assert scheduler.numTotalJobs() - before == 2
+    qe = out._jdf.queryExecution()
+    assert "lambdafunction" not in qe.analyzed().toString().lower()
+    assert re.search(
+        r"(BroadcastHash|SortMerge|ShuffledHash)Join \[__jband#\d+\], "
+        r"\[__band_r#\d+\]",
+        qe.executedPlan().toString(),
+    ), qe.executedPlan().toString()
+    assert out.count() == sum(450 - max(150, v + 1) for v in range(300))
+
+
+def test_quantile_cuts_match_approx_quantile(spark):
+    # the statistics aggregate's cuts are approxQuantile's, bit for bit:
+    # NaN and NULL left out, same accuracy
+    import random
+
+    from pandance_spark.operators.ineq import _quantile_cuts
+
+    rnd = random.Random(5)
+    normal = [rnd.gauss(0, 1) for _ in range(3000)]
+    atoms = [float(rnd.randrange(20)) for _ in range(3000)]
+    for vals in (normal, atoms, normal[:7] + [math.nan, None, math.inf]):
+        df = spark.createDataFrame([(v,) for v in vals], "v double")
+        got = df.select(*[_quantile_cuts(F.col("v"), nb) for nb in (2, 64)])
+        for nb, cuts in zip((2, 64), got.collect()[0]):
+            probs = [i / nb for i in range(1, nb)]
+            assert cuts == df.dropna().approxQuantile("v", probs, 0.001)
