@@ -1822,12 +1822,11 @@ def _q_simhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes, the 64-bit vote-fold signatures AND the brute-force truth
     all SQL-replayable — the oracle recomputes the entire evaluation
     pair-for-pair."""
-    from pandance_spark.functions.text import (
-        tokenize,
-        word_shingles_from_tokens,
-    )
+    from pandance_spark.functions.text import tokenize
     from pandance_spark.operators.dedup import (
-        _ngram_jaccard_from_raw,
+        _ngram_jaccard,
+        _set_elements,
+        _shingle_base,
         _simhash_signatures_from_tokens,
         dedup_eval,
         hamming_candidates,
@@ -1844,11 +1843,9 @@ def _q_simhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 100000).alias("doc_id"),
         dropped.alias("text"),
     )
-    # r12 (VERDICT r11 item 4): both chains consumed (doc_id, text) and
-    # TOKENIZED it independently; the shared checkpoint now carries the
-    # token arrays instead, so the scan + variant projection + tokenize
-    # run once for the whole harness (the simhash votes hash the same
-    # tokens, the jaccard truth shingles them — bit-identical values).
+    # the shared checkpoint carries the token arrays, so the scan +
+    # variant projection + tokenize run once for the whole harness (the
+    # simhash votes hash the tokens, the jaccard truth shingles them)
     toks = (
         docs.unionAll(variants)
         .repartition(spark.sparkContext.defaultParallelism)
@@ -1867,21 +1864,10 @@ def _q_simhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         return hamming_candidates(sig, "id", "__sh", max_hamming=3)
 
     def _truth():
-        raw = (
-            toks.select(
-                F.col("doc_id").alias("id"),
-                F.explode(
-                    F.array_distinct(
-                        F.transform(
-                            word_shingles_from_tokens(F.col("__toks"), 3),
-                            lambda s: F.xxhash64(s),
-                        )
-                    )
-                ).alias("sh"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        return _ngram_jaccard_from_raw(raw, 0.6)
+        raw = _set_elements(
+            _shingle_base(toks, "doc_id", F.col("__toks"), 3)
+        ).localCheckpoint(eager=True)
+        return _ngram_jaccard(raw, 0.6)
 
     from concurrent.futures import ThreadPoolExecutor
 

@@ -60,7 +60,12 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     from pandance_spark.operators.dedup import minhash_candidates
-    from pandance_spark.operators.dedup import _ngram_candidates
+    from pandance_spark.functions.text import tokenize
+    from pandance_spark.operators.dedup import (
+        _ngram_candidates,
+        _set_elements,
+        _shingle_base,
+    )
     from pandance_spark.operators.ineq import ineq_join
 
     # ---- synthetic corpus: 25-token docs, 10% exact duplicates ------
@@ -115,7 +120,10 @@ def main():
     for tag, n in (("x1", n_small), ("x10", n_big)):
         docs = corpus(n)
         t0 = time.time()
-        cand_df, _sets = _ngram_candidates(docs, "doc_id", "text", 3, 0.8)
+        raw = _set_elements(
+            _shingle_base(docs, "doc_id", tokenize(F.col("text")), 3)
+        ).localCheckpoint(eager=True)
+        cand_df, _sets = _ngram_candidates(raw, 0.8)
         c = cand_df.count()
         walls[tag], cands[tag] = round(time.time() - t0, 2), c
     ratio = cands["x10"] / max(cands["x1"], 1)

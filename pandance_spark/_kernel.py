@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import numbers
 import re as _re
 from typing import Optional, Tuple
 
@@ -122,15 +123,33 @@ def numeric_view(col: Column, dtype: T.DataType) -> Column:
 
 
 def sql_literal(v) -> str:
-    """Exact Spark SQL text for a cut value.  A double is its shortest
-    round-trip ``repr`` cast from a string (which also spells
-    ``inf``/``-inf``/``nan``); a string is its UTF-8 bytes as a hex
-    literal cast to STRING, so no quoting or escape rule applies."""
+    """Exact Spark SQL text for a cut or key value.  A double is its
+    shortest round-trip ``repr`` cast from a string (which also spells
+    ``inf``/``-inf``/``nan``); an integer is a BIGINT; a string is its
+    UTF-8 bytes as a hex literal cast to STRING, so no quoting or
+    escape rule applies."""
     if isinstance(v, float):  # float(): numpy's repr is not the value
         return f"CAST('{float(v)!r}' AS DOUBLE)"
+    if isinstance(v, numbers.Integral) and not isinstance(v, bool):
+        return f"CAST({int(v)} AS BIGINT)"
     if isinstance(v, str):
         return f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
     raise TypeError(f"unsupported cut value type: {type(v).__name__}")
+
+
+def salt_count(col_name: str, hot: dict) -> Column:
+    """Salt count of each value of column ``col_name``: ``hot[key]`` for
+    a hot key, 1 for every other value and for NULL.  ONE ``F.expr``
+    CASE with the keys rendered by :func:`sql_literal`, so the plan
+    costs a fixed number of driver calls however many keys are hot
+    (the pattern of :func:`band_id`)."""
+    if not hot:
+        return F.lit(1)
+    ref = "`" + col_name.replace("`", "``") + "`"
+    whens = "".join(
+        f" WHEN {ref} = {sql_literal(k)} THEN {int(s)}" for k, s in hot.items()
+    )
+    return F.expr(f"CASE{whens} ELSE 1 END")
 
 
 def band_id(df: DataFrame, value: Column, cuts, name: str) -> DataFrame:
@@ -214,20 +233,30 @@ def spread_partitions(df: DataFrame, cap: int = None) -> DataFrame:
     return df
 
 
-def plan_size_bytes(df: DataFrame):
-    """Catalyst size estimate of the optimized plan, in bytes (no job
-    runs); ``None`` when statistics are unavailable.  The ONE home of
-    the private ``queryExecution().optimizedPlan().stats()`` py4j
-    chain — strategy pickers, the broadcast gate of the skew machinery,
-    the scan spreader, the GEMM gate (dedup) and output-partition
-    planning (layout) all call this, so a Spark upgrade that moves the
-    API breaks exactly one site."""
+def plan_stats(df: DataFrame):
+    """``(size_in_bytes, row_count)``: Catalyst's estimates for the
+    optimized plan (no job runs), each ``None`` when unknown.  The ONE
+    home of the private ``queryExecution().optimizedPlan().stats()``
+    py4j chain — strategy pickers, the broadcast gate of the skew
+    machinery, the scan spreader, the GEMM gate (dedup), output-
+    partition planning (layout) and the cross-join memory estimate
+    (``plans.mem``) all go through it, so a Spark upgrade that moves
+    the API breaks exactly one site."""
     try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        rows = stats.rowCount()
+        return (
+            int(stats.sizeInBytes()),
+            int(rows.get()) if rows.isDefined() else None,
         )
     except Exception:
-        return None
+        return None, None
+
+
+def plan_size_bytes(df: DataFrame):
+    """Catalyst size estimate of the optimized plan, in bytes; ``None``
+    when statistics are unavailable (see :func:`plan_stats`)."""
+    return plan_stats(df)[0]
 
 
 def parse_bytes_conf(spark, key: str, default: int) -> int:

@@ -9,15 +9,53 @@ shape that survives a 1000-executor 100 TB run: work is proportional to
 
 Operators
 ---------
-- ``dedup_exact``       exact duplicate removal, deterministic keeper
-- ``duplicate_groups``  exact-duplicate group listing
-- ``minhash_signature`` per-row MinHash signature column
-- ``minhash_candidates``/``dedup_minhash``  LSH banding -> candidate
-  pairs -> exact Jaccard verification
-- ``simhash``           64-bit SimHash fingerprint column
-- ``simhash_candidates`` near-dup pairs within a Hamming radius
-- ``ngram_jaccard_join`` exact n-gram Jaccard similarity self-join
+Exact duplicates:
+
+- ``dedup_exact``        exact duplicate removal, deterministic keeper
+- ``duplicate_groups``   exact-duplicate group listing
+- ``dedup_paragraphs``   corpus-wide exact paragraph dedup
+- ``remove_boilerplate`` lines recurring across a scope's documents
+
+Signatures and LSH:
+
+- ``minhash_signature``  per-row MinHash signature column
+- ``minhash_candidates`` / ``dedup_minhash``  LSH banding -> candidate
+  pairs [-> exact Jaccard verification]
+- ``build_minhash_index`` / ``add_to_minhash_index`` /
+  ``dedup_against_index``  the same pipeline against a persisted index
+- ``lsh_params``         bands/rows for a target Jaccard threshold
+- ``simhash`` / ``simhash_signatures``  64-bit SimHash fingerprints
+- ``simhash_candidates`` / ``hamming_candidates``  pairs within a
+  Hamming radius
+
+Exact set-similarity joins:
+
+- ``ngram_jaccard_join`` n-gram Jaccard self-join, ``jaccard_topk`` its
+  top-k form
+- ``overlap_set_join``   pairs sharing at least c distinct n-grams
+- ``containment_join``   corpus documents holding a query's n-grams
+- ``edit_distance_join`` Levenshtein self-join on positional q-grams
+
+Substring and fingerprint matching:
+
+- ``fingerprint_overlap_join``  pairs sharing winnowed fingerprints
+- ``dedup_substrings``   duplicate token spans within one corpus
+- ``contamination_spans`` shared token spans corpus x benchmark
+
+Embeddings:
+
 - ``embedding_cosine_pairs`` near-dup pairs by embedding cosine
+- ``semantic_dedup``     SemDeDup-style cluster-local dedup
+
+Public outside ``__all__``: ``minhash_eval`` / ``dedup_eval`` (dedup
+quality reports) and ``record_linkage`` (the two-table edit-distance
+join).
+
+The exact set-similarity joins and the MinHash pipelines share one
+implementation of each stage: shingle staging (:func:`_shingle_base`),
+the rarest-first global order (:func:`_rarest_first`), exact Jaccard
+verification (:func:`_verify_jaccard`), the LSH band self-join
+(:func:`_banded_pairs`) and the eval report (:func:`dedup_eval`).
 """
 
 from __future__ import annotations
@@ -381,19 +419,21 @@ def dedup_minhash(
     similarity of the shingle sets (>= threshold).
 
     Returns (id_a, id_b, jaccard).  ONE tokenize/shingle/hash pass
-    feeds both the signature pipeline and the verification sets: the
-    shared checkpoint carries the 31-bit-folded hash array (signature
-    input, bit-identical to :func:`minhash_candidates`) and the
-    distinct 64-bit shingle-hash set.  Verification intersects the
-    64-bit hash sets instead of the shingle strings — same Jaccard
-    (collisions over a document's few-hundred shingles are ~2^-64
-    birthday-improbable) at a fraction of the compare cost.  Two
-    broadcast-or-shuffle hash joins fetch the sets onto the candidate
-    pairs.
+    (:func:`_shingle_base`) feeds both the signature pipeline and the
+    verification sets: the shared checkpoint carries the 31-bit-folded
+    hash array (signature input, bit-identical to
+    :func:`minhash_candidates`) and the distinct 64-bit shingle-hash
+    set.  Candidates are the band collisions of :func:`_banded_pairs`;
+    :func:`_verify_jaccard` intersects the 64-bit hash sets instead of
+    the shingle strings — same Jaccard (collisions over a document's
+    few-hundred shingles are ~2^-64 birthday-improbable) at a fraction
+    of the compare cost.
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
-    base = _shingle_base(df, id_col, text_col, shingle_n)
+    base = _shingle_base(
+        _spread(df), id_col, tokenize(F.col(text_col)), shingle_n, fold="xxhash"
+    ).localCheckpoint(eager=True)
     # banded keys checkpointed too: the candidate self-join evaluates
     # both branches and would otherwise run the signature fold twice
     banded = _bands_from_hashed(
@@ -403,31 +443,101 @@ def dedup_minhash(
         bands,
         seed,
     ).localCheckpoint(eager=True)
-    ba = banded.withColumnRenamed(id_col, "id_a")
-    bb = banded.withColumnsRenamed(
-        {id_col: "id_b", "band": "band_b", "bhash": "bhash_b"}
-    )
-    cands = (
-        ba.join(
-            bb,
-            (ba["band"] == bb["band_b"])
-            & (ba["bhash"] == bb["bhash_b"])
-            & (ba["id_a"] < bb["id_b"]),
-            "inner",
+    sets = base.select("__id", "__set")
+    return _verify_jaccard(_banded_pairs(banded, id_col), sets, sets, threshold)
+
+
+def _shingle_base(
+    df: DataFrame,
+    id_col: str,
+    toks: Column,
+    shingle_n: int,
+    fold: Optional[str] = None,
+) -> DataFrame:
+    """The one shingle staging of the set-similarity joins:
+    ``(__id, __set[, __hashed])`` per row of ``df``, where ``toks`` is a
+    token-array Column over ``df``.  ``__set`` is the distinct 64-bit
+    xxhash64 shingle-hash set (exact verification and prefix
+    filtering).  ``fold`` adds ``__hashed``, the 31-bit-folded hash
+    array that feeds the MinHash signature: ``"xxhash"`` folds the same
+    64-bit hashes, so each shingle is hashed once; ``"md5"`` is the
+    portable hash of :func:`_shingle_hash`.  Neither spread nor
+    checkpointed: each caller keeps its own partitioning and barrier.
+    """
+    staged = (
+        df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
+        .select(
+            "__id",
+            word_shingles_from_tokens(F.col("__toks"), shingle_n).alias("__sh"),
         )
-        .select("id_a", "id_b")
-        .distinct()
     )
-    a = base.select(F.col("__id").alias("id_a"), F.col("__set").alias("__set_a"))
-    b = base.select(F.col("__id").alias("id_b"), F.col("__set").alias("__set_b"))
-    joined = cands.join(a, "id_a").join(b, "id_b")
+    sh64 = F.transform("__sh", lambda s: F.xxhash64(s))
+    if fold is None:
+        return staged.select("__id", F.array_distinct(sh64).alias("__set"))
+    if fold == "md5":
+        hashed = F.transform("__sh", lambda s: _shingle_hash(s, portable=True))
+    else:  # stage the 64-bit hashes so the fold does not hash again
+        staged = staged.select("__id", sh64.alias("__sh"))
+        sh64 = F.col("__sh")
+        hashed = F.transform("__sh", lambda h: F.pmod(h, F.lit(_PRIME)))
+    return staged.select(
+        "__id", F.array_distinct(sh64).alias("__set"), hashed.alias("__hashed")
+    )
+
+
+def _set_elements(base: DataFrame) -> DataFrame:
+    """The exploded ``(id, sh)`` element stream of a :func:`_shingle_base`
+    frame; documents without shingles contribute no rows."""
+    return base.select(F.col("__id").alias("id"), F.explode("__set").alias("sh"))
+
+
+def _rarest_first(stream: DataFrame, corpus: Optional[DataFrame] = None) -> DataFrame:
+    """``(id, __set)``: each id's elements of the exploded ``(id, sh)``
+    ``stream`` as one array in the global rarest-first order that every
+    prefix filter here slices its prefix from — ascending document
+    frequency, ties by element (the canonical AllPairs/PPJoin order:
+    prefixes of each set's RAREST elements generate an order of
+    magnitude fewer candidates on natural text than raw-hash order;
+    the filters are correct under any fixed total order).  Frequencies
+    count ``stream`` itself, or the ``corpus`` ``sh`` stream when
+    given; an element the corpus lacks has frequency 0 and sorts
+    first."""
+    freq = (stream if corpus is None else corpus).groupBy("sh").agg(
+        F.count("*").alias("__df")
+    )
+    if corpus is None:
+        ranked = stream.join(freq, "sh")
+    else:
+        ranked = stream.join(freq, "sh", "left").withColumn(
+            "__df", F.coalesce(F.col("__df"), F.lit(0))
+        )
+    return (
+        ranked.groupBy("id")
+        .agg(F.sort_array(F.collect_list(F.struct("__df", "sh"))).alias("__arr"))
+        .select("id", F.transform("__arr", lambda x: x["sh"]).alias("__set"))
+    )
+
+
+def _verify_jaccard(
+    cands: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard verification of every Jaccard join: fetch both
+    sides' full sets onto each candidate pair (two hash joins) and keep
+    the pairs whose Jaccard, rounded to 6 dp, is ``>= threshold``.
+    ``cands`` holds the pair's two keys as its first two columns;
+    ``sets_a``/``sets_b`` are ``(key, set)`` frames for either side.
+    Returns ``(key_a, key_b, jaccard)``."""
+    ka, kb = cands.columns[:2]
+    joined = cands.join(sets_a.toDF(ka, "__set_a"), ka).join(
+        sets_b.toDF(kb, "__set_b"), kb
+    )
     inter = F.size(F.array_intersect("__set_a", "__set_b"))
     union = F.size("__set_a") + F.size("__set_b") - inter
     jacc = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
         joined.withColumn("jaccard", F.round(jacc, 6))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(ka, kb, "jaccard")
     )
 
 
@@ -512,8 +622,7 @@ def _simhash_signatures_from_tokens(
     toks_df: DataFrame, seed: int = 42, portable: bool = False
 ) -> DataFrame:
     """:func:`simhash_signatures` from a pre-tokenized ``(id, __toks)``
-    frame — the r12 shared-input path for the eval harness, which
-    tokenizes the corpus once for both its chains."""
+    frame, for callers that tokenize once for several signals."""
     ids = toks_df.select("id")
     tok = toks_df.select(
         "id",
@@ -646,10 +755,11 @@ def ngram_jaccard_join(
     t * |s| <= t * |union|``).  So the inverted index holds only the
     prefix — candidate generation shrinks ~``(1-t)²``-fold versus
     indexing every shingle — and exact Jaccard on the full sets
-    verifies each candidate.  Exact for any fixed total order; we order
-    by ascending global document frequency (rarest first), the
-    canonical AllPairs/PPJoin choice, plus a candidate length filter
-    (``t * max(|a|,|b|) <= min(|a|,|b|)``).
+    verifies each candidate.  The stages are the shared ones: shingle
+    staging (:func:`_shingle_base`), the rarest-first global order
+    (:func:`_rarest_first`), the prefix join with a candidate length
+    filter (``t * max(|a|,|b|) <= min(|a|,|b|)``) and PPJoin's
+    positional filter, then :func:`_verify_jaccard`.
 
     Shuffles: one explode+equi-join on 8-byte prefix hashes (work
     proportional to prefix collisions, never rows²), then two hash
@@ -658,107 +768,34 @@ def ngram_jaccard_join(
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
-    cands, sets_df = _ngram_candidates(
-        df, id_col, text_col, shingle_n, threshold
-    )
-    return _ngram_verify(cands, sets_df, threshold)
-
-
-def _ngram_verify(
-    cands: DataFrame, sets_df: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification stage of :func:`ngram_jaccard_join`:
-    fetch both documents' full sets onto each candidate pair and keep
-    rounded Jaccard >= threshold."""
-    sa = sets_df.withColumnsRenamed({"id": "id_a", "__set": "__set_a"})
-    sb = sets_df.withColumnsRenamed({"id": "id_b", "__set": "__set_b"})
-    joined = cands.join(sa, "id_a").join(sb, "id_b")
-    inter = F.size(F.array_intersect("__set_a", "__set_b"))
-    union = F.size("__set_a") + F.size("__set_b") - inter
-    jacc = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        joined.withColumn("jaccard", F.round(jacc, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _ngram_jaccard_from_raw(raw: DataFrame, threshold: float) -> DataFrame:
-    """:func:`ngram_jaccard_join` from a pre-built ``(id, sh)`` exploded
-    distinct shingle-hash stream — the r12 shared-input path for the
-    eval harnesses, which already hold the per-document shingle sets
-    behind a checkpoint and must not rebuild them per chain.  ``raw``
-    must be cheap to re-evaluate (a projection of a checkpoint): it
-    feeds both the document-frequency aggregate and the per-document
-    set build."""
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError("threshold must be in (0, 1]")
-    cands, sets_df = _ngram_candidates_from_raw(raw, threshold)
-    return _ngram_verify(cands, sets_df, threshold)
-
-
-def _ngram_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    threshold: float,
-):
-    """Candidate-generation stage of :func:`ngram_jaccard_join`,
-    factored out so scale probes can measure candidate volume (the
-    quantity that must grow ∝ prefix collisions, not rows²) without
-    paying for verification.  Returns ``(cands, sets_df)``.
-    """
-    df = _spread(df)
     # checkpoint the exploded shingle stream: it feeds BOTH the global
     # document-frequency aggregate and the per-document set build, and
     # Exchange reuse across those branches is not guaranteed — without
     # the checkpoint the tokenize/shingle/hash pipeline runs twice
-    raw = (
-        df.select(
-            F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("__toks")
-        )
-        .select(
-            "id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        word_shingles_from_tokens(F.col("__toks"), shingle_n),
-                        lambda s: F.xxhash64(s),
-                    )
-                )
-            ).alias("sh"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    return _ngram_candidates_from_raw(raw, threshold)
+    raw = _set_elements(
+        _shingle_base(_spread(df), id_col, tokenize(F.col(text_col)), shingle_n)
+    ).localCheckpoint(eager=True)
+    return _ngram_jaccard(raw, threshold)
 
 
-def _ngram_candidates_from_raw(raw: DataFrame, threshold: float):
-    """Candidate generation from an ``(id, sh)`` exploded distinct
-    shingle-hash stream (see :func:`_ngram_candidates`, which builds
-    and checkpoints that stream from text)."""
-    # global prefix order = ascending DOCUMENT FREQUENCY (ties by hash):
-    # the canonical AllPairs/PPJoin ordering.  Prefixes then consist of
-    # each document's RAREST shingles, so the inverted-index join
-    # generates an order of magnitude fewer candidates on natural text
-    # than raw-hash order (correct under any fixed total order).
-    freq = raw.groupBy("sh").agg(F.count("*").alias("__df"))
-    sets_df = (
-        raw.join(freq, "sh")
-        .groupBy("id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("__df", "sh"))).alias("__arr")
-        )
-        .select(
-            "id",
-            F.transform("__arr", lambda x: x["sh"]).alias("__set"),
-        )
-        # checkpoint: consumed by the prefix index AND both verification
-        # joins; Exchange reuse across renamed branches is not
-        # guaranteed, a checkpoint is
-        .localCheckpoint(eager=True)
-    )
+def _ngram_jaccard(raw: DataFrame, threshold: float) -> DataFrame:
+    """:func:`ngram_jaccard_join` from an ``(id, sh)`` element stream
+    (:func:`_set_elements`) with a validated ``threshold``.  ``raw``
+    must be cheap to re-evaluate (a projection of a checkpoint): it
+    feeds both the document-frequency aggregate and the set build."""
+    cands, sets_df = _ngram_candidates(raw, threshold)
+    return _verify_jaccard(cands, sets_df, sets_df, threshold)
+
+
+def _ngram_candidates(raw: DataFrame, threshold: float):
+    """Candidate-generation stage of :func:`_ngram_jaccard`, separate so
+    scale probes can measure candidate volume (the quantity that must
+    grow ∝ prefix collisions, not rows²) without paying for
+    verification.  Returns ``(cands, sets_df)``."""
+    # checkpoint: consumed by the prefix index AND both verification
+    # joins; Exchange reuse across renamed branches is not guaranteed,
+    # a checkpoint is
+    sets_df = _rarest_first(raw).localCheckpoint(eager=True)
     # the output filter keeps ROUNDED jaccard >= threshold, which
     # admits exact J down to threshold - 5e-7: every pruning bound
     # below must use that effective threshold, or boundary pairs
@@ -1079,37 +1116,6 @@ def _gemm_cosine_pairs(
 # --------------------------------------------------------------------------
 
 
-def _shingle_base(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int
-) -> DataFrame:
-    """Checkpointed (``__id``, ``__set``, ``__hashed``) staging frame:
-    the distinct 64-bit shingle-hash set (exact-Jaccard verification)
-    and the 31-bit-folded hash array (signature input) from ONE
-    tokenize/shingle/hash pass.  Same staging as :func:`dedup_minhash`.
-    """
-    df = _spread(df)
-    return (
-        df.select(
-            F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__toks")
-        )
-        .select(
-            "__id",
-            F.transform(
-                word_shingles_from_tokens(F.col("__toks"), shingle_n),
-                lambda s: F.xxhash64(s),
-            ).alias("__sh64"),
-        )
-        .select(
-            "__id",
-            F.array_distinct("__sh64").alias("__set"),
-            F.transform("__sh64", lambda h: F.pmod(h, F.lit(_PRIME))).alias(
-                "__hashed"
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
 def build_minhash_index(
     corpus: DataFrame,
     id_col: str,
@@ -1129,7 +1135,8 @@ def build_minhash_index(
     touching (re-reading, re-hashing, or re-shuffling) the corpus —
     the property that makes continuous 100 TB ingestion affordable.
 
-    Three catalog tables (same layout idea as the persisted IVF index,
+    Staging and banding are :func:`dedup_minhash`'s.  Three catalog
+    tables (same layout idea as the persisted IVF index,
     ``similarity.build_ivf_index``):
 
     - ``{table}_bands`` (id, band, bhash) BUCKETED BY ``bhash``: the
@@ -1146,7 +1153,10 @@ def build_minhash_index(
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
     spark = corpus.sparkSession
-    base = _shingle_base(corpus, id_col, text_col, shingle_n)
+    base = _shingle_base(
+        _spread(corpus), id_col, tokenize(F.col(text_col)), shingle_n,
+        fold="xxhash",
+    ).localCheckpoint(eager=True)
     banded = _bands_from_hashed(
         base.select(F.col("__id").alias(id_col), "__hashed"),
         id_col,
@@ -1200,7 +1210,10 @@ def add_to_minhash_index(
     # not the caller's — a batch whose id column is named differently
     # would otherwise fail (or mis-map) the by-name append resolution
     idx_id = meta["id_col"]
-    base = _shingle_base(new_docs, id_col, text_col, meta["shingle_n"])
+    base = _shingle_base(
+        _spread(new_docs), id_col, tokenize(F.col(text_col)), meta["shingle_n"],
+        fold="xxhash",
+    ).localCheckpoint(eager=True)
     banded = _bands_from_hashed(
         base.select(F.col("__id").alias(idx_id), "__hashed"),
         idx_id,
@@ -1240,9 +1253,10 @@ def dedup_against_index(
     scheme.
 
     Cost model: the batch is tokenized/hashed once (per-row Column
-    work), its band keys shuffle-join against the bucket-pre-shuffled
-    ``{table}_bands`` (corpus side does NOT move), candidate pairs
-    fetch corpus sets from the id-bucketed ``{table}_sets`` — every
+    work, :func:`_shingle_base`), its band keys shuffle-join against
+    the bucket-pre-shuffled ``{table}_bands`` (corpus side does NOT
+    move), and :func:`_verify_jaccard` fetches corpus sets from the
+    id-bucketed ``{table}_sets`` onto the candidate pairs — every
     join moves only batch-proportional data.  The corpus parquet is
     never re-read beyond the collided buckets' rows.
     """
@@ -1253,7 +1267,10 @@ def dedup_against_index(
     )
     corpus_id = meta["id_col"]
 
-    base = _shingle_base(new_docs, id_col, text_col, shingle_n)
+    base = _shingle_base(
+        _spread(new_docs), id_col, tokenize(F.col(text_col)), shingle_n,
+        fold="xxhash",
+    ).localCheckpoint(eager=True)
     new_bands = _bands_from_hashed(
         base.select(F.col("__id").alias("new_id"), "__hashed"),
         "new_id",
@@ -1274,21 +1291,9 @@ def dedup_against_index(
         .select("new_id", "corpus_id")
         .distinct()
     )
-    new_sets = base.select(
-        F.col("__id").alias("new_id"), F.col("__set").alias("__set_a")
-    )
-    idx_sets = spark.table(f"{table}_sets").select(
-        F.col(corpus_id).alias("corpus_id"),
-        F.col("shingle_set").alias("__set_b"),
-    )
-    joined = cands.join(new_sets, "new_id").join(idx_sets, "corpus_id")
-    inter = F.size(F.array_intersect("__set_a", "__set_b"))
-    union = F.size("__set_a") + F.size("__set_b") - inter
-    jacc = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        joined.withColumn("jaccard", F.round(jacc, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
+    idx_sets = spark.table(f"{table}_sets").select(corpus_id, "shingle_set")
+    return _verify_jaccard(
+        cands, base.select("__id", "__set"), idx_sets, threshold
     )
 
 
@@ -1414,6 +1419,7 @@ def edit_distance_join(
     # k is comparable to the string length), so the wider prefix
     # exchange costs ~prefix_len string copies — bytes the old plan
     # paid anyway in its two verification joins.
+    # a window, not _rarest_first: slower at sf0.1 (bench_history/edit_distance_order_sf01.json)
     ranked = grams.join(freq, "__g").withColumn(
         "__rk",
         F.row_number().over(
@@ -1553,67 +1559,45 @@ def overlap_set_join(
     total order, the smallest SHARED element of A and B must sit
     within the first ``|A| - c + 1`` elements of A and the first
     ``|B| - c + 1`` of B (everything before it on each side is
-    unshared) — so indexing only that prefix, ordered rarest-first,
-    generates no false negatives.  Sets smaller than ``c`` cannot
-    qualify and are dropped before the index.  Exact
-    ``array_intersect`` verification on candidates.
+    unshared) — so indexing only that prefix, in the rarest-first
+    order of :func:`_rarest_first`, generates no false negatives.  Sets
+    smaller than ``c`` cannot qualify and are dropped before the index.
+    Sets come from :func:`_shingle_base`; exact ``array_intersect``
+    verification on candidates.
 
     Returns ``(id_a, id_b, overlap)`` with ``id_a < id_b``.
     """
     if min_overlap < 1:
         raise ValueError("min_overlap must be >= 1")
     base = (
-        _spread(df)
-        .select(
-            F.col(id_col).alias("__id"),
-            tokenize(F.col(text_col)).alias("__toks"),
-        )
-        .select(
-            "__id",
-            F.array_distinct(
-                F.transform(
-                    word_shingles_from_tokens(F.col("__toks"), shingle_n),
-                    lambda s: F.xxhash64(s),
-                )
-            ).alias("__set"),
-        )
+        _shingle_base(_spread(df), id_col, tokenize(F.col(text_col)), shingle_n)
         .filter(F.size("__set") >= min_overlap)
         .localCheckpoint(eager=True)
     )
-    elems = base.select(
-        "__id", F.size("__set").alias("__n"), F.explode("__set").alias("__e")
-    )
-    freq = elems.groupBy("__e").agg(F.count(F.lit(1)).alias("__df"))
     prefix = (
-        elems.join(freq, "__e")
-        .withColumn(
-            "__rk",
-            F.row_number().over(
-                Window.partitionBy("__id").orderBy(
-                    F.col("__df").asc(), F.col("__e").asc()
-                )
-            ),
+        _rarest_first(_set_elements(base))
+        .select(
+            "id",
+            F.explode(
+                F.slice("__set", F.lit(1), F.size("__set") - min_overlap + 1)
+            ).alias("sh"),
         )
-        .filter(F.col("__rk") <= F.col("__n") - min_overlap + 1)
-        .select("__id", "__e")
         .localCheckpoint(eager=True)
     )
-    pa = prefix.withColumnRenamed("__id", "id_a")
-    pb = prefix.withColumnsRenamed({"__id": "id_b", "__e": "__e_b"})
+    pa = prefix.withColumnRenamed("id", "id_a")
+    pb = prefix.withColumnsRenamed({"id": "id_b", "sh": "sh_b"})
     cands = (
         pa.join(
             pb,
-            (pa["__e"] == pb["__e_b"]) & (pa["id_a"] < pb["id_b"]),
+            (pa["sh"] == pb["sh_b"]) & (pa["id_a"] < pb["id_b"]),
             "inner",
         )
         .select("id_a", "id_b")
         .distinct()
     )
-    sa = base.select(F.col("__id").alias("id_a"), F.col("__set").alias("__set_a"))
-    sb = base.select(F.col("__id").alias("id_b"), F.col("__set").alias("__set_b"))
     return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
+        cands.join(base.toDF("id_a", "__set_a"), "id_a")
+        .join(base.toDF("id_b", "__set_b"), "id_b")
         .withColumn(
             "overlap", F.size(F.array_intersect("__set_a", "__set_b"))
         )
@@ -2149,10 +2133,11 @@ def containment_join(
     ``>= ceil(t*|A|)`` means at least one of A's first
     ``|A| - ceil(t*|A|) + 1`` shingles under ANY fixed total order
     must land in B (pigeonhole) — so only QUERY PREFIXES are exploded
-    against the full corpus shingle index.  The order used is
-    ascending CORPUS document frequency (rarest first), so prefix
-    probes hit the short postings lists; a query shingle absent from
-    the corpus has df 0, sorts first, and generates zero candidates.
+    against the full corpus shingle index.  Both sides are staged by
+    :func:`_shingle_base`; the order is :func:`_rarest_first` over
+    CORPUS document frequency, so prefix probes hit the short postings
+    lists; a query shingle absent from the corpus has df 0, sorts
+    first, and generates zero candidates.
     Shuffles: corpus explode + frequency aggregate (linear in corpus
     shingles — the same pass ``contamination_check`` pays), one
     prefix equi-join (work ∝ collisions, never |Q| x |C|), then two
@@ -2165,48 +2150,26 @@ def containment_join(
     cid = corpus_id or query_id
     ctext = corpus_text or query_text
 
-    def _doc_shingles(df, id_src, id_out, text_src):
-        toks = df.select(
-            F.col(id_src).alias(id_out),
-            tokenize(F.col(text_src)).alias("__toks"),
-        )
-        return toks.select(
-            id_out,
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        word_shingles_from_tokens(F.col("__toks"), shingle_n),
-                        lambda s: F.xxhash64(s),
-                    )
-                )
-            ).alias("sh"),
-        )
-
     # corpus pass: exploded shingles feed BOTH the df-frequency
     # aggregate and the inverted index / set build — checkpoint so the
     # tokenize/shingle/hash pipeline runs once (Exchange reuse across
     # branches is not guaranteed)
-    craw = _doc_shingles(corpus, cid, "corpus_id", ctext).localCheckpoint(
-        eager=True
+    craw = (
+        _set_elements(
+            _shingle_base(corpus, cid, tokenize(F.col(ctext)), shingle_n)
+        )
+        .withColumnRenamed("id", "corpus_id")
+        .localCheckpoint(eager=True)
     )
-    freq = craw.groupBy("sh").agg(F.count("*").alias("__df"))
     csets = craw.groupBy("corpus_id").agg(
         F.collect_set("sh").alias("__cset")
     )
-    qraw = _doc_shingles(query, query_id, "query_id", query_text)
-    # query sets ordered by (corpus df asc, hash): absent shingles get
-    # df 0 via the left join's coalesce
+    qraw = _set_elements(
+        _shingle_base(query, query_id, tokenize(F.col(query_text)), shingle_n)
+    )
     qsets = (
-        qraw.join(freq, "sh", "left")
-        .withColumn("__df", F.coalesce(F.col("__df"), F.lit(0)))
-        .groupBy("query_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("__df", "sh"))).alias("__arr")
-        )
-        .select(
-            "query_id",
-            F.transform("__arr", lambda x: x["sh"]).alias("__qset"),
-        )
+        _rarest_first(qraw, corpus=craw)
+        .toDF("query_id", "__qset")
         .localCheckpoint(eager=True)
     )
     # rounded-output semantics: round(c, 6) >= t admits exact c down to
@@ -2554,7 +2517,9 @@ def minhash_eval(
     dedup at scale.  Ground truth is :func:`ngram_jaccard_join`
     (exact, prefix-filtered — itself scalable, so the harness runs on
     real samples, not toy ones); candidates are
-    :func:`minhash_candidates` with the same shingle size.
+    :func:`minhash_candidates` with the same shingle size.  Both chains
+    read one :func:`_shingle_base` staging, and the report is
+    :func:`dedup_eval`'s.
 
     Returns ONE row: ``n_docs, n_true, n_candidates, n_verified,
     recall, precision`` (9 dp; 1.0/0.0 conventions for empty
@@ -2577,6 +2542,8 @@ def minhash_eval(
     full-corpus metrics and ``n_docs`` reports the sample size; see
     :func:`_stratified_doc_sample` for the sampling contract.
     """
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError("threshold must be in (0, 1]")
     if truth_sample_frac is not None:
         f = float(truth_sample_frac)
         if not (0.0 < f <= 1.0):
@@ -2587,42 +2554,18 @@ def minhash_eval(
             df = _stratified_doc_sample(
                 df, id_col, text_col, f, seed, portable
             )
-    # r12 (VERDICT r11 item 4): the truth chain and the candidate
-    # chain each tokenized + shingled the checkpointed corpus
-    # independently (the r11 form checkpointed (id, text) and ran the
-    # full text pipeline once per chain).  ONE staged pass now
-    # computes BOTH hash families over the same shingle array — the
-    # truth chain's distinct xxhash64 set and the candidate chain's
-    # 31-bit-folded (optionally portable md5) array — and the
-    # checkpoint carries those instead of text: tokenize + shingle
-    # run once for the whole harness.  Values are bit-identical to
-    # the per-chain builds (same expressions over the same staged
-    # array), so truth, candidates and the report are unchanged.
-    # Spread FIRST so the checkpointed partitioning keeps the
-    # amplified stages parallel.
-    df = _spread(df.select(id_col, text_col))
-    base = (
-        df.select(
-            F.col(id_col).alias("__id"),
-            tokenize(F.col(text_col)).alias("__toks"),
-        )
-        .select(
-            "__id",
-            word_shingles_from_tokens(F.col("__toks"), shingle_n).alias(
-                "__sh"
-            ),
-        )
-        .select(
-            "__id",
-            F.array_distinct(
-                F.transform(F.col("__sh"), lambda s: F.xxhash64(s))
-            ).alias("__set"),
-            F.transform(
-                F.col("__sh"), lambda s: _shingle_hash(s, portable)
-            ).alias("__hashed"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    # ONE staged pass computes both hash families, the truth chain's
+    # distinct xxhash64 set and the candidate chain's 31-bit-folded
+    # (optionally portable md5) array, so tokenize + shingle run once
+    # for the whole harness.  Spread first so the checkpointed
+    # partitioning keeps the amplified stages parallel.
+    base = _shingle_base(
+        _spread(df.select(id_col, text_col)),
+        id_col,
+        tokenize(F.col(text_col)),
+        shingle_n,
+        fold="md5" if portable else "xxhash",
+    ).localCheckpoint(eager=True)
     # guide §2.6 "overlap independent jobs" (r11): each chain still
     # materializes its own eager checkpoint at BUILD time (prefix-
     # ordered sets / banded signature keys); they are independent
@@ -2631,10 +2574,7 @@ def minhash_eval(
     from concurrent.futures import ThreadPoolExecutor
 
     def _truth():
-        raw = base.select(
-            F.col("__id").alias("id"), F.explode("__set").alias("sh")
-        )
-        return _ngram_jaccard_from_raw(raw, threshold)
+        return _ngram_jaccard(_set_elements(base), threshold)
 
     def _cands():
         banded = _bands_from_hashed(
@@ -2652,39 +2592,7 @@ def minhash_eval(
         cands_f = pool.submit(_cands)
         truth = truth_f.result()
         cands = cands_f.result()
-    # truth and cands each feed TWO consumers (their count aggregate
-    # and the verified join); without a barrier Spark re-evaluates the
-    # exact all-pairs join and the LSH plan once per consumer —
-    # doubling the two most expensive stages of the harness
-    # (ADVICE r8).  localCheckpoint materializes each exactly once;
-    # both are pair-lists (bounded by true/candidate pair counts), not
-    # corpus-sized.
-    truth = truth.localCheckpoint(eager=False)
-    cands = cands.localCheckpoint(eager=False)
-    verified = cands.join(truth, ["id_a", "id_b"], "inner")
-    n_docs = base.select(F.count("*").alias("n_docs"))
-    n_true = truth.select(F.count("*").alias("n_true"))
-    n_cand = cands.select(F.count("*").alias("n_candidates"))
-    n_ver = verified.select(F.count("*").alias("n_verified"))
-    rep = n_docs.crossJoin(n_true).crossJoin(n_cand).crossJoin(n_ver)
-    return rep.select(
-        "n_docs",
-        "n_true",
-        "n_candidates",
-        "n_verified",
-        F.round(
-            F.when(F.col("n_true") > 0,
-                   F.col("n_verified") / F.col("n_true"))
-            .otherwise(F.lit(1.0)),
-            9,
-        ).alias("recall"),
-        F.round(
-            F.when(F.col("n_candidates") > 0,
-                   F.col("n_verified") / F.col("n_candidates"))
-            .otherwise(F.lit(0.0)),
-            9,
-        ).alias("precision"),
-    )
+    return dedup_eval(cands, truth, n_docs=base.select("__id"))
 
 
 def dedup_eval(
@@ -2693,33 +2601,33 @@ def dedup_eval(
     n_docs: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Generic dedup-quality report for ANY candidate generator
-    (r11 — the harness :func:`minhash_eval` builds inline, factored
-    so simhash / embedding / custom candidate sets audit the same
-    way): given ``candidates`` and ``truth`` as (id_a, id_b) pair
-    tables (id_a < id_b, any extra columns ignored), return ONE row
-    ``n_true, n_candidates, n_verified, recall, precision`` — with
-    ``n_docs`` prepended when a 1-column frame of document ids is
-    passed.  Same conventions as minhash_eval: recall = 1.0 and
+    (:func:`minhash_eval` ends in it; simhash / embedding / custom
+    candidate sets audit the same way): given ``candidates`` and
+    ``truth`` as (id_a, id_b) pair tables (id_a < id_b, any extra
+    columns ignored), return ONE row ``n_true, n_candidates,
+    n_verified, recall, precision`` — with ``n_docs`` prepended when a
+    1-column frame of document ids is passed.  recall = 1.0 and
     precision = 0.0 on empty denominators, 9 dp.
 
     Both inputs feed two consumers (their count + the verification
-    join); each is checkpointed so neither generator re-runs
-    (pair-list-sized, never corpus-sized)."""
+    join); without a barrier Spark re-evaluates each generator once
+    per consumer, so each is checkpointed (pair-list-sized, never
+    corpus-sized)."""
     cands = candidates.select("id_a", "id_b").localCheckpoint(eager=False)
     tru = truth.select("id_a", "id_b").localCheckpoint(eager=False)
     verified = cands.join(tru, ["id_a", "id_b"], "inner")
-    n_true = tru.select(F.count("*").alias("n_true"))
-    n_cand = cands.select(F.count("*").alias("n_candidates"))
-    n_ver = verified.select(F.count("*").alias("n_verified"))
-    rep = n_true.crossJoin(n_cand).crossJoin(n_ver)
-    if n_docs is not None:
-        nd = n_docs.select(F.count("*").alias("n_docs"))
-        rep = nd.crossJoin(rep)
-    cols = ([] if n_docs is None else ["n_docs"]) + [
-        "n_true", "n_candidates", "n_verified",
+    counts = [
+        tru.select(F.count("*").alias("n_true")),
+        cands.select(F.count("*").alias("n_candidates")),
+        verified.select(F.count("*").alias("n_verified")),
     ]
+    if n_docs is not None:
+        counts.insert(0, n_docs.select(F.count("*").alias("n_docs")))
+    rep = counts[0]
+    for c in counts[1:]:
+        rep = rep.crossJoin(c)
     return rep.select(
-        *cols,
+        *rep.columns,
         F.round(
             F.when(F.col("n_true") > 0,
                    F.col("n_verified") / F.col("n_true"))

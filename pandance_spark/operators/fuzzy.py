@@ -56,6 +56,7 @@ from pandance_spark._kernel import (
     likely_shuffle_join,
     nested_loop_sized,
     resolve_join_columns,
+    salt_count,
     sampled_hot_keys,
     tolerance_to_micros,
     two_sided_minmax,
@@ -187,27 +188,14 @@ def fuzzy_join(
         return left2.join(right2, exact, "inner").select(*out_cols)
 
     # band-bucketed equi-join ------------------------------------------------
-    lbucket = F.floor(lval.cast("double") / F.lit(bucket_width))
-    rbucket = F.floor(rval.cast("double") / F.lit(bucket_width))
-    lb = left2.withColumn("__bucket", lbucket)
-    rb = right2.withColumn(
-        "__bucket",
-        F.explode(
-            F.array(
-                *[
-                    rbucket + F.lit(i)
-                    for i in range(-_BUCKET_MARGIN, _BUCKET_MARGIN + 1)
-                ]
-            )
-        ),
-    )
+    lb, rb = _bucket_sides(left2, right2, lval, rval, bucket_width)
 
     hot_l = hot_r = {}
     if skew_salting == "always" or (
         skew_salting == "auto" and likely_shuffle_join(left2, right2)
     ):
-        hot_l = sampled_hot_keys(left2, lbucket)
-        hot_r = sampled_hot_keys(right2, rbucket)
+        hot_l = sampled_hot_keys(left2, _bucket(lval, bucket_width))
+        hot_r = sampled_hot_keys(right2, _bucket(rval, bucket_width))
     if hot_r:
         # a hot right VALUE explodes into its ±margin neighbor buckets,
         # so every one of those bucket keys receives the full hot mass;
@@ -228,12 +216,31 @@ def fuzzy_join(
     return joined.select(*out_cols)
 
 
-def _salt_count(hot: dict) -> Column:
-    """CASE expression mapping __bucket to its salt count (1 if cold)."""
-    expr = F.lit(1)
-    for b, s in hot.items():
-        expr = F.when(F.col("__bucket") == F.lit(b), F.lit(s)).otherwise(expr)
-    return expr
+def _bucket(v: Column, width: float) -> Column:
+    """Bucket id ``floor(v / width)`` over the double view of ``v``."""
+    return F.floor(v.cast("double") / F.lit(width))
+
+
+def _bucket_sides(
+    left: DataFrame, right: DataFrame, lval: Column, rval: Column, width: float
+) -> Tuple[DataFrame, DataFrame]:
+    """The two inputs of the band-bucketed equi-join on ``__bucket``:
+    each left row in its own bucket, each right row exploded into every
+    bucket within ``±_BUCKET_MARGIN`` of its own, so a pair within
+    ``width`` always shares a bucket.  Batch and streaming fuzzy joins
+    both build their buckets here."""
+    rbucket = _bucket(rval, width)
+    return left.withColumn("__bucket", _bucket(lval, width)), right.withColumn(
+        "__bucket",
+        F.explode(
+            F.array(
+                *[
+                    rbucket + F.lit(i)
+                    for i in range(-_BUCKET_MARGIN, _BUCKET_MARGIN + 1)
+                ]
+            )
+        ),
+    )
 
 
 def _salted_bucket_join(
@@ -258,7 +265,7 @@ def _salted_bucket_join(
     salting.  AQE cannot do this: a fat bucket is one join KEY, and
     partition-splitting never subdivides a key.
     """
-    sl_n, sr_n = _salt_count(hot_l), _salt_count(hot_r)
+    sl_n, sr_n = salt_count("__bucket", hot_l), salt_count("__bucket", hot_r)
     lbs = lb.withColumn(
         "__salt_l",
         F.pmod(F.xxhash64(F.struct(*[lb[c] for c in lb.columns])), sl_n),

@@ -60,6 +60,7 @@ from pandance_spark._kernel import (
     nested_loop_sized,
     numeric_view,
     resolve_join_columns,
+    salt_count,
     two_sided_minmax,
 )
 
@@ -411,23 +412,17 @@ def _band_join(
         # (AQE's skew-join split can rescue sort-merge joins, but with
         # ~num_bands distinct join keys a fat band is one KEY, not one
         # partition — salting is the only lever that subdivides it.)
-        def salt_count(band_col: Column) -> Column:
-            expr = F.lit(1)
-            for b, s in hot.items():
-                expr = F.when(band_col == F.lit(b), F.lit(s)).otherwise(expr)
-            return expr
-
         rb = rb.withColumn(
             "__salt_r",
             F.pmod(
                 F.xxhash64(F.struct(*[rb[c] for c in rb.columns])),
-                salt_count(F.col("__band_r")),
+                salt_count("__band_r", hot),
             ),
         )
         lb = lb.withColumn(
             "__salt",
             F.explode(
-                F.sequence(F.lit(0), salt_count(F.col("__jband")) - 1)
+                F.sequence(F.lit(0), salt_count("__jband", hot) - 1)
             ),
         )
         joined = lb.join(

@@ -13,12 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from pandance_spark._kernel import plan_stats
+
 __all__ = ["estimate_mem_cost_cartesian", "explain_str"]
-
-
-def _stats(df: DataFrame):
-    qe = df._jdf.queryExecution()
-    return qe.optimizedPlan().stats()
 
 
 def estimate_mem_cost_cartesian(a: DataFrame, b: DataFrame) -> int:
@@ -29,20 +26,16 @@ def estimate_mem_cost_cartesian(a: DataFrame, b: DataFrame) -> int:
     estimates; purely advisory (Spark spills rather than OOMs on big
     cross joins).
     """
-    try:
-        sa, sb = _stats(a), _stats(b)
-        ra = sa.rowCount().isDefined() and int(sa.rowCount().get()) or None
-        rb = sb.rowCount().isDefined() and int(sb.rowCount().get()) or None
-        bytes_a, bytes_b = int(sa.sizeInBytes()), int(sb.sizeInBytes())
-        if ra and rb and ra > 0 and rb > 0:
-            row_bytes = bytes_a / ra + bytes_b / rb
-            total = ra * rb * row_bytes
-        else:
-            # fall back to size product scaled by a nominal 100-byte row
-            total = (bytes_a / 100.0) * (bytes_b / 100.0) * 100.0
-        return int(total // (1024 * 1024))
-    except Exception:
+    (bytes_a, ra), (bytes_b, rb) = plan_stats(a), plan_stats(b)
+    if bytes_a is None or bytes_b is None:
         return -1
+    if ra and rb and ra > 0 and rb > 0:
+        row_bytes = bytes_a / ra + bytes_b / rb
+        total = ra * rb * row_bytes
+    else:
+        # fall back to size product scaled by a nominal 100-byte row
+        total = (bytes_a / 100.0) * (bytes_b / 100.0) * 100.0
+    return int(total // (1024 * 1024))
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

@@ -1644,8 +1644,8 @@ def streaming_fuzzy_join(
         validate_tol_value,
     )
     from pandance_spark.operators.fuzzy import (
-        _BUCKET_MARGIN,
         _MAX_BUCKET_QUOTIENT,
+        _bucket_sides,
     )
 
     left_on, right_on = resolve_join_columns(
@@ -1694,21 +1694,7 @@ def streaming_fuzzy_join(
             "the values"
         )
 
-    lb = left2.withColumn(
-        "__bucket", F.floor(lval.cast("double") / F.lit(bucket_width))
-    )
-    rbucket = F.floor(rval.cast("double") / F.lit(bucket_width))
-    rb = right2.withColumn(
-        "__bucket",
-        F.explode(
-            F.array(
-                *[
-                    rbucket + F.lit(i)
-                    for i in range(-_BUCKET_MARGIN, _BUCKET_MARGIN + 1)
-                ]
-            )
-        ),
-    )
+    lb, rb = _bucket_sides(left2, right2, lval, rval, bucket_width)
     return lb.join(rb, "__bucket", "inner").filter(exact).select(*out_cols)
 
 

@@ -92,3 +92,24 @@ def test_band_id_string_boundaries(spark):
 def test_band_id_no_cuts_is_band_zero(spark):
     got = bands(spark, T.DoubleType(), [-1.0, 0.0, math.nan], [])
     assert [b for _, b, _ in got] == [0, 0, 0]
+
+
+def test_salt_count_matches_dict_lookup(spark):
+    # the salt-count CASE of the salted fuzzy and ineq joins equals a
+    # dict lookup with default 1: negative bucket ids, keys near ±2^62,
+    # NULL, and an empty hot map (every value cold)
+    from pandance_spark._kernel import salt_count
+
+    big = 1 << 62
+    values = [-7, -1, 0, 1, 3, big - 1, big, big + 1, -big, -big - 1, None]
+    hot = {-7: 4, 0: 2, big: 64, -big - 1: 3, 3: 9}
+    col = "b `k"  # a column name with a space and a backtick
+    df = spark.createDataFrame(
+        list(enumerate(values)), f"i int, `{col.replace('`', '``')}` long"
+    )
+    for h in (hot, {}):
+        got = {
+            r["i"]: r["s"]
+            for r in df.select("i", salt_count(col, h).alias("s")).collect()
+        }
+        assert got == {i: h.get(v, 1) for i, v in enumerate(values)}

@@ -56,10 +56,21 @@ def test_minhash_signature_shape_and_determinism(docs_with_dups):
     assert diff < 8
 
 
-def test_minhash_dedup_finds_near_dups(docs_with_dups):
-    pairs = dedup_minhash(
+def _build_jobs(spark, build):
+    """(result of ``build()``, jobs it ran): the eager-checkpoint jobs
+    paid while the plan is built, before anything executes it."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    out = build()
+    return out, scheduler.numTotalJobs() - before
+
+
+def test_minhash_dedup_finds_near_dups(spark, docs_with_dups):
+    # two eager checkpoints: the shingle staging and the banded keys
+    pairs, jobs = _build_jobs(spark, lambda: dedup_minhash(
         docs_with_dups, "doc_id", "text", threshold=0.5, num_hashes=64, bands=16
-    )
+    ))
+    assert jobs == 2
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # exact dup
     assert (1, 3) in got or (2, 3) in got  # near dup
@@ -69,18 +80,35 @@ def test_minhash_dedup_finds_near_dups(docs_with_dups):
 
 
 def test_ngram_jaccard_exact(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d e"),
-            (2, "a b c d x"),
-            (3, "p q r s t"),
-        ],
-        "doc_id long, text string",
-    )
+    import itertools
+    import re
+
+    rows = [
+        (1, "a b c d e"),
+        (2, "a b c d x"),
+        (3, "p q r s t"),
+        (4, ""),
+        (5, None),
+        (6, "a b"),  # fewer tokens than shingle_n
+        (7, "a b c d e"),  # exact duplicate of 1
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     # 3-shingles: doc1 {abc,bcd,cde}, doc2 {abc,bcd,cdx} -> J = 2/4 = 0.5
     out = ngram_jaccard_join(df, "doc_id", "text", shingle_n=3, threshold=0.4)
-    rows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
-    assert rows == {(1, 2): 0.5}
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+
+    def shingles(t):
+        toks = re.findall(r"[a-z0-9]+", (t or "").lower())
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    want = {}
+    for (a, ta), (b, tb) in itertools.combinations(rows, 2):
+        sa, sb = shingles(ta), shingles(tb)
+        j = round(len(sa & sb) / len(sa | sb), 6) if sa | sb else 0.0
+        if j >= 0.4:
+            want[(a, b)] = j
+    assert got == want
+    assert got == {(1, 2): 0.5, (1, 7): 1.0, (2, 7): 0.5}
 
 
 def test_simhash_properties(docs_with_dups):
@@ -430,7 +458,7 @@ def test_edit_distance_join_fuzz_vs_brute_force(spark):
             assert got == want
 
 
-def test_overlap_set_join_vs_brute_force(spark):
+def test_overlap_set_join_vs_brute_force(spark, monkeypatch):
     import itertools
     import random
     import re
@@ -443,21 +471,35 @@ def test_overlap_set_join_vs_brute_force(spark):
         (i, " ".join(rng.sample(vocab, rng.randint(0, 15))))
         for i in range(50)
     ]
+    # empty, NULL, shorter than shingle_n = 2, exact duplicate of a row
+    rows += [(50, ""), (51, None), (52, "w1"), (53, rows[0][1])]
     df = spark.createDataFrame(rows, "id long, s string")
-    for c in (3, 8):
-        got = sorted(
-            (r["id_a"], r["id_b"], r["overlap"])
-            for r in overlap_set_join(
-                df, "id", "s", min_overlap=c, shingle_n=1
-            ).collect()
-        )
+    # the rarest-first prefix is sliced from one sorted array per set,
+    # not ranked by a window; the prefix sits behind a checkpoint, so
+    # the plans are read as they are checkpointed
+    checkpointed = []
+    real_checkpoint = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(self._jdf.queryExecution().analyzed().toString())
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    for c, n in ((3, 1), (8, 1), (3, 2)):
+        out = overlap_set_join(df, "id", "s", min_overlap=c, shingle_n=n)
+        plans = checkpointed + [out._jdf.queryExecution().analyzed().toString()]
+        assert not any("Window" in plan for plan in plans)
+        got = sorted((r["id_a"], r["id_b"], r["overlap"]) for r in out.collect())
         want = []
-        toks = {i: set(re.findall(r"[a-z0-9]+", s.lower())) for i, s in rows}
+        toks = {}
+        for i, s in rows:
+            w = re.findall(r"[a-z0-9]+", (s or "").lower())
+            toks[i] = {" ".join(w[j : j + n]) for j in range(len(w) - n + 1)}
         for (a, _), (b, _) in itertools.combinations(rows, 2):
             ov = len(toks[a] & toks[b])
             if ov >= c:
                 want.append((a, b, ov))
-        assert got == sorted(want), c
+        assert got == sorted(want), (c, n)
 
 
 def test_fingerprint_overlap_join_exact(spark):
@@ -1226,6 +1268,15 @@ def test_containment_join_exact_vs_bruteforce(spark):
         (11, "spark query planning"),                 # inside 2 and 4
         (12, "nothing shared with anything here xyz"),
         (13, "ab"),                                   # < shingle_n tokens
+        (14, ""),
+        (15, None),
+        (16, "quick brown fox jumps over"),           # duplicate of 10
+    ]
+    corpus_rows += [
+        (5, ""),
+        (6, None),
+        (7, "quick brown"),  # < shingle_n tokens
+        (8, corpus_rows[2][1]),  # exact duplicate of 3
     ]
     corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
     query = spark.createDataFrame(query_rows, "qid long, text string")
@@ -1239,7 +1290,7 @@ def test_containment_join_exact_vs_bruteforce(spark):
     }
 
     def shingles(t):
-        toks = [w for w in t.lower().split() if w]
+        toks = [w for w in (t or "").lower().split() if w]
         return {
             " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
         }
@@ -1255,7 +1306,8 @@ def test_containment_join_exact_vs_bruteforce(spark):
                 expect[(qid, cid)] = c
     assert got == expect
     assert (10, 1) in got and (10, 3) in got and got[(10, 3)] == 1.0
-    assert all(q != 13 for q, _ in got)  # shingle-less query -> no rows
+    assert all(q not in (13, 14, 15) for q, _ in got)  # shingle-less: no rows
+    assert got[(16, 8)] == got[(10, 3)] == 1.0
 
 
 def test_containment_join_threshold_boundary(spark):
@@ -1290,6 +1342,14 @@ def test_minhash_eval_report(spark):
     df = spark.createDataFrame(base + copies, ["doc_id", "text"])
     r = minhash_eval(df, "doc_id", "text", threshold=0.9).collect()[0]
     assert r["n_docs"] == 28
+    # the portable build pays the same eager checkpoints: the shingle
+    # staging, the truth chain's sorted sets and the banded keys
+    rp, jobs = _build_jobs(spark, lambda: minhash_eval(
+        df, "doc_id", "text", threshold=0.9, portable=True
+    ))
+    assert jobs == 17
+    rp = rp.collect()[0]
+    assert (rp["n_docs"], rp["n_true"], rp["n_verified"]) == (28, 8, 8)
     assert r["n_true"] == 8
     # identical signatures collide in every band: perfect recall here
     assert r["n_verified"] == 8 and r["recall"] == 1.0
