@@ -1,9 +1,11 @@
-"""Row-for-row output hashes of the set-similarity operators.
+"""Row-for-row output hashes of the set-similarity operators, or of any
+registered queries.
 
-    python bench_history/probe_scripts/setsim_parity.py CHECKOUT_DIR SF_DIR OUT.json
+    python bench_history/probe_scripts/setsim_parity.py CHECKOUT_DIR SF_DIR OUT.json [QUERY ...]
 
 Imports ``pandance_spark`` and ``__spark_entry__`` from CHECKOUT_DIR, runs
-each operator on SF_DIR at local[3], and writes, per operator, the row
+each operator (or each named ``queries()`` entry instead, when QUERY
+names are given) on SF_DIR at local[3], and writes, per operator, the row
 count and the order-insensitive value hash of ``scripts/check_correctness.py``
 (columns sorted by name, rows sorted, values canonicalized), the jobs run
 while the DataFrame is built, and node counts of the executed (final AQE)
@@ -76,6 +78,7 @@ def main():
     if sys.argv[1] == "--compare":
         sys.exit(0 if compare(sys.argv[2], sys.argv[3]) else 1)
     checkout, sf, out = sys.argv[1:4]
+    cases = {n: registered(n) for n in sys.argv[4:]} or CASES
     sys.path.insert(0, os.path.abspath(checkout))
     sys.path.insert(1, os.path.join(os.path.abspath(checkout), "scripts"))
     from pyspark.sql import SparkSession
@@ -95,7 +98,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     ops = {}
     scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    for name, build in CASES.items():
+    for name, build in cases.items():
         t0 = time.time()
         jobs0 = scheduler.numTotalJobs()
         df = build(spark, sf, entry)

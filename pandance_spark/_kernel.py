@@ -42,12 +42,12 @@ try:  # PySpark >= 3.4 typed error classes
         PySparkValueError,
     )
 
-    # The errors approxQuantile raises when a column CANNOT be
-    # quantiled (unsupported type, bad column, client-side validation).
-    # Band/bucket planners catch exactly these to fall back to a
-    # non-banded plan; execution errors (SparkException, Py4J) must
-    # propagate — a silent fallback would swap a transient failure for
-    # an O(n*m) plan at 100 TB.
+    # The errors the quantile aggregate (quantile_cuts) raises when a
+    # column CANNOT be quantiled (unsupported type, bad column,
+    # client-side validation).  Band/bucket planners catch exactly
+    # these to fall back to a non-banded plan; execution errors
+    # (SparkException, Py4J) must propagate — a silent fallback would
+    # swap a transient failure for an O(n*m) plan at 100 TB.
     QUANTILE_UNSUPPORTED = (
         AnalysisException,
         IllegalArgumentException,
@@ -150,6 +150,20 @@ def salt_count(col_name: str, hot: dict) -> Column:
         f" WHEN {ref} = {sql_literal(k)} THEN {int(s)}" for k, s in hot.items()
     )
     return F.expr(f"CASE{whens} ELSE 1 END")
+
+
+def quantile_cuts(value: Column, num_bands: int) -> Column:
+    """Aggregate: the ``num_bands - 1`` interior quantiles of a double
+    column — bit for bit the DataFrame statistics quantiles at relative
+    error 0.001: NaN (and NULL) left out, accuracy ``1 / 0.001``; NULL
+    when no value is left.  The
+    probabilities are one SQL array so the plan's driver calls do not
+    grow with ``num_bands``.  The one quantile source of the band
+    planners (ineq, overlap, asof)."""
+    probs = ", ".join(sql_literal(i / num_bands) for i in range(1, num_bands))
+    return F.percentile_approx(
+        F.when(~F.isnan(value), value), F.expr(f"array({probs})"), 1000
+    )
 
 
 def band_id(df: DataFrame, value: Column, cuts, name: str) -> DataFrame:
@@ -365,8 +379,9 @@ def two_sided_minmax(left: DataFrame, lval, right: DataFrame, rval, rextra=None)
 
     Tag + union + grouped agg: still two scans, but a single job
     submission instead of two sequential ``.agg().first()`` round trips
-    — the disjoint fast paths run this before every join call, so the
-    scheduling latency is on the operator's critical path.  The union
+    — ``ineq_join``'s disjoint fast path, its only caller, runs this
+    before every join call, so the scheduling latency is on the
+    operator's critical path (``fuzzy_join`` has no fast path).  The union
     analyzer widens mixed-but-comparable numeric/decimal types; if the
     types don't unify we fall back to two separate aggregations.
 

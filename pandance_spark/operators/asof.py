@@ -40,6 +40,7 @@ from pandance_spark._kernel import (
     band_id,
     is_timestamp_type,
     numeric_view,
+    quantile_cuts,
     resolve_join_columns,
     tolerance_to_micros,
 )
@@ -199,11 +200,11 @@ def _bucketed_running_last(
     row at-or-after each row — with the mirrored construction (first
     right row per bucket, carried backward), for ``direction="nearest"``.
     """
-    stats = union.select("__ord").dropna()
     try:
-        cuts = sorted(
-            set(stats.approxQuantile("__ord", [i / num_buckets for i in range(1, num_buckets)], 0.001))
-        )
+        raw = union.select(
+            quantile_cuts(F.col("__ord").cast("double"), num_buckets)
+        ).first()[0]
+        cuts = sorted(set(raw or ()))
     except _QUANTILE_UNSUPPORTED:
         # un-quantilable order column -> single-window fallback is the
         # plan; execution errors propagate (see _kernel note)

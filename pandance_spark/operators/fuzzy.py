@@ -11,7 +11,7 @@ is a **band-bucketed equi-join**:
 
 A pair with ``|l - r| <= tol`` must land in the same or an adjacent
 bucket, so exploding one side to its neighboring buckets and hash-joining
-on bucket id followed by the exact ``abs(l - r) <= tol`` filter finds
+on bucket id followed by the exact ``|l - r| <= tol`` filter finds
 every match with shuffle-parallel, output-proportional work — no
 interval tree, no O(n*m) scan.
 
@@ -34,9 +34,13 @@ Semantics mirrored from the reference (SURVEY.md §1):
 
 Strategies
 ----------
-- ``"band"`` (the scalable default): bucket equi-join described above.
-- ``"range"``: plain conditional join
-  ``right BETWEEN left - tol AND left + tol`` — BroadcastNestedLoopJoin
+- ``"band"`` (the scalable default): bucket equi-join described above,
+  over the rows inside its ``|v|/tol <= 2^51`` operating bound.  Rows
+  past the bound take an exact broadcast branch, routed per row with
+  no statistics job, so no magnitude loses matches.  Unlike the
+  reference's ``ineq_join`` there is no min/max fast path.
+- ``"range"``: plain conditional join on the exact predicate
+  ``try_subtract(l, r) BETWEEN -tol AND tol`` — BroadcastNestedLoopJoin
   under Catalyst; optimal when one side is broadcast-sized and used as
   the in-repo oracle for the band form.
 - ``"auto"``: plan-statistics pick between the two.
@@ -48,6 +52,7 @@ from typing import Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pandance_spark._kernel import (
     as_instant,
@@ -59,7 +64,6 @@ from pandance_spark._kernel import (
     salt_count,
     sampled_hot_keys,
     tolerance_to_micros,
-    two_sided_minmax,
     validate_fuzzy_types,
     validate_tol_value,
 )
@@ -71,14 +75,13 @@ __all__ = ["fuzzy_join"]
 # bucket boundaries (double division + floor can be off by one ulp).
 _BUCKET_MARGIN = 2
 
-# operating range of the band strategy: floor(v/tol) in double has
+# operating bound of the band strategy: floor(v/tol) in double has
 # absolute error ~|v/tol| * 2^-53, so once |v|/tol approaches 2^53 the
-# bucket id can be off by MORE than the +-2 margin and matches would be
-# silently dropped (mirrors the reference's large-value/small-tolerance
-# caveat).  2^51 leaves a 4x safety factor; beyond it fuzzy_join falls
-# back to the exact range strategy when the quotient is detectable
-# (disjoint_fast_path on, the default) — with the fast path disabled the
-# caller owns the contract.
+# bucket id can be off by MORE than the +-2 margin (mirrors the
+# reference's large-value/small-tolerance caveat).  2^51 leaves a 4x
+# safety factor.  There is no fuzzy fast path and no min/max job:
+# every row past the bound is routed to the exact branch of _route,
+# so matches are never lost and no bucket id is computed for it.
 _MAX_BUCKET_QUOTIENT = float(1 << 51)
 
 
@@ -91,7 +94,6 @@ def fuzzy_join(
     tol=1e-3,
     suffixes: Tuple[str, str] = ("_x", "_y"),
     strategy: str = "auto",
-    disjoint_fast_path: bool = True,
     skew_salting: str = "auto",
 ) -> DataFrame:
     """Inner join rows whose join values differ by at most ``tol``.
@@ -100,6 +102,12 @@ def fuzzy_join(
     (``pandance/pandance.py:22-208``): same parameter names and
     defaults (``tol=1e-3``, ``suffixes=('_x', '_y')``); ``strategy``
     and ``skew_salting`` are Spark-side extensions.
+
+    Like the reference, there is no min/max short-circuit: building
+    the plan runs no Spark job.  The band strategy is correct at every
+    magnitude — rows with ``|v|/tol`` past its 2^51 operating bound
+    take an exact broadcast branch instead (:func:`_route`), and a
+    difference that overflows the value type counts as beyond ``tol``.
 
     ``skew_salting``: a value carrying a large share of one side's
     rows puts that whole share into ONE bucket key, which one reducer
@@ -114,88 +122,36 @@ def fuzzy_join(
     mode.
     """
     if strategy not in ("auto", "band", "range"):
-        # validate BEFORE any fast path so a typo raises regardless of
-        # whether the data happens to short-circuit
         raise ValueError(f"unknown strategy {strategy!r}")
     if skew_salting not in ("auto", "always", "never"):
         raise ValueError(f"unknown skew_salting {skew_salting!r}")
-    left_on, right_on = resolve_join_columns(left, right, on, left_on, right_on)
-    ltype = left.schema[left_on].dataType
-    rtype = right.schema[right_on].dataType
-    mode = validate_fuzzy_types(ltype, rtype, tol)
-    validate_tol_value(tol)
-
-    left = finite_filter(left, left_on)
-    right = finite_filter(right, right_on)
-    left2, right2, lcol, rcol = apply_suffixes(
-        left, right, left_on, right_on, suffixes
+    left2, right2, out_cols, lval, rval, exact, bucket_width = _prepare(
+        left, right, on, left_on, right_on, tol, suffixes
     )
-    out_cols = [*left2.columns, *right2.columns]
-
-    if mode == "timestamp":
-        tol_us = tolerance_to_micros(tol)
-        lval = F.unix_micros(as_instant(left2[lcol]))
-        rval = F.unix_micros(as_instant(right2[rcol]))
-        tol_lit = F.lit(tol_us)
-        bucket_width = float(tol_us)
-    else:
-        # decimal columns: the exact predicate runs in decimal
-        # arithmetic; only the bucket id uses a double approximation
-        # (the +-2 explode margin absorbs that rounding)
-        tol_lit = F.lit(tol)
-        bucket_width = float(tol)
-        lval, rval = left2[lcol], right2[rcol]
-
-    exact = F.abs(lval - rval) <= tol_lit
-
-    if disjoint_fast_path:
-        tol_cmp = tol_us if mode == "timestamp" else tol
-        fast, max_abs = _try_fuzzy_fast_path(
-            left2, right2, lval, rval, tol_cmp, out_cols
-        )
-        if fast is not None:
-            return fast
-        # extreme |v|/tol overflows the +-2 bucket margin: band would
-        # silently DROP matches.  auto falls back to the exact range
-        # join (correct, possibly slow); an explicitly requested band
-        # is a contract violation -> raise rather than silently run an
-        # unbounded nested-loop plan in its place.
-        if (
-            max_abs is not None
-            and bucket_width > 0.0
-            and float(max_abs) / bucket_width > _MAX_BUCKET_QUOTIENT
-        ):
-            if strategy == "band":
-                raise ValueError(
-                    "band strategy out of operating range: |value|/tol "
-                    f"~ {float(max_abs) / bucket_width:.2e} exceeds 2^51, "
-                    "floor(v/tol) in double would drop matches; use "
-                    "strategy='range' (exact) or rescale the values"
-                )
-            strategy = "range"
 
     if strategy == "auto":
         # the range form is a nested-loop join — only sane when the
         # smaller side is dimension-table sized; the band form is a
         # hash join and safe at any scale
         strategy = "range" if nested_loop_sized(left2, right2) else "band"
-    if strategy == "range" or bucket_width == 0.0:
+    if bucket_width == 0.0:
         # tol == 0 degenerates to an exact equi-join on the value
-        if bucket_width == 0.0:
-            return (
-                left2.join(right2, lval == rval, "inner").select(*out_cols)
-            )
+        return left2.join(right2, lval == rval, "inner").select(*out_cols)
+    if strategy == "range":
         return left2.join(right2, exact, "inner").select(*out_cols)
 
-    # band-bucketed equi-join ------------------------------------------------
-    lb, rb = _bucket_sides(left2, right2, lval, rval, bucket_width)
+    # band-bucketed equi-join over the in-range rows -------------------------
+    left_safe, right_safe, out_of_range = _route(
+        left2, right2, lval, rval, bucket_width, exact, out_cols
+    )
+    lb, rb = _bucket_sides(left_safe, right_safe, lval, rval, bucket_width)
 
     hot_l = hot_r = {}
     if skew_salting == "always" or (
         skew_salting == "auto" and likely_shuffle_join(left2, right2)
     ):
-        hot_l = sampled_hot_keys(left2, _bucket(lval, bucket_width))
-        hot_r = sampled_hot_keys(right2, _bucket(rval, bucket_width))
+        hot_l = sampled_hot_keys(left_safe, _bucket(lval, bucket_width))
+        hot_r = sampled_hot_keys(right_safe, _bucket(rval, bucket_width))
     if hot_r:
         # a hot right VALUE explodes into its ±margin neighbor buckets,
         # so every one of those bucket keys receives the full hot mass;
@@ -209,11 +165,98 @@ def fuzzy_join(
                 expanded[k] = max(expanded.get(k, 0), s)
         hot_r = expanded
     if hot_l or hot_r:
-        return _salted_bucket_join(
-            lb, rb, hot_l, hot_r, exact, out_cols
+        band = _salted_bucket_join(lb, rb, hot_l, hot_r, exact, out_cols)
+    else:
+        band = lb.join(rb, "__bucket", "inner").filter(exact).select(*out_cols)
+    return band.unionAll(out_of_range)
+
+
+def _prepare(left, right, on, left_on, right_on, tol, suffixes):
+    """The validated, NaN/Inf/NULL-filtered and suffixed inputs of a
+    fuzzy join with the views its predicate runs on: ``(left2, right2,
+    out_cols, lval, rval, exact, width)``.  Timestamps compare as epoch
+    microseconds against a microsecond ``width``; numbers compare as
+    themselves (decimals stay exact; only the bucket id and the routing
+    use a double view), integers narrower than long widened so their
+    difference cannot overflow.  Batch and streaming fuzzy joins both
+    start here."""
+    left_on, right_on = resolve_join_columns(left, right, on, left_on, right_on)
+    ltype = left.schema[left_on].dataType
+    rtype = right.schema[right_on].dataType
+    mode = validate_fuzzy_types(ltype, rtype, tol)
+    validate_tol_value(tol)
+    left2, right2, lcol, rcol = apply_suffixes(
+        finite_filter(left, left_on),
+        finite_filter(right, right_on),
+        left_on,
+        right_on,
+        suffixes,
+    )
+    lval, rval = left2[lcol], right2[rcol]
+    if mode == "timestamp":
+        lval, rval = F.unix_micros(as_instant(lval)), F.unix_micros(as_instant(rval))
+        tol = tolerance_to_micros(tol)
+    narrow = (T.ByteType, T.ShortType, T.IntegerType)
+    if isinstance(ltype, narrow):
+        lval = lval.cast("long")
+    if isinstance(rtype, narrow):
+        rval = rval.cast("long")
+    out_cols = [*left2.columns, *right2.columns]
+    return left2, right2, out_cols, lval, rval, _exact(lval, rval, tol), float(tol)
+
+
+def _exact(lval: Column, rval: Column, tol) -> Column:
+    """The exact predicate ``|l - r| <= tol``, written so it cannot
+    raise: a difference that overflows its type is NULL, and such a
+    difference is necessarily larger than ``tol``.  Every fuzzy plan,
+    batch and streaming, filters with it."""
+    return F.try_subtract(lval, rval).between(F.lit(-tol), F.lit(tol))
+
+
+def _route(
+    left: DataFrame,
+    right: DataFrame,
+    lval: Column,
+    rval: Column,
+    width: float,
+    exact: Column,
+    out_cols,
+) -> Tuple[DataFrame, DataFrame, DataFrame]:
+    """Route each row by its own magnitude, with no statistics job.
+
+    With the bound ``B = _MAX_BUCKET_QUOTIENT * width`` (compared on
+    the double view of the value), rows with ``|v| <= B`` are returned
+    as ``(left_safe, right_safe)`` for the band join.  The third frame
+    is the exact branch: the rows near or past ``B`` on each side,
+    right side broadcast, joined on ``exact`` for pairs with at least
+    one row past ``B``.  A matching row is within ``width`` of its
+    partner, so ``B - 2 * width`` keeps every partner of a row past
+    ``B`` (one ``width`` of slack absorbs the double rounding).  A pair
+    of in-range rows only matches in the band join, so the union of
+    the two holds each pair once.  Batch and streaming fuzzy joins
+    both route here; in streaming the broadcast side is the static
+    one.
+    """
+    bound = _MAX_BUCKET_QUOTIENT * width
+
+    def mag(v: Column) -> Column:
+        return F.abs(v.cast("double"))
+
+    near = bound - 2 * width
+    exact_branch = (
+        left.filter(mag(lval) > near)
+        .join(
+            F.broadcast(right.filter(mag(rval) > near)),
+            exact & ((mag(lval) > bound) | (mag(rval) > bound)),
+            "inner",
         )
-    joined = lb.join(rb, "__bucket", "inner").filter(exact)
-    return joined.select(*out_cols)
+        .select(*out_cols)
+    )
+    return (
+        left.filter(mag(lval) <= bound),
+        right.filter(mag(rval) <= bound),
+        exact_branch,
+    )
 
 
 def _bucket(v: Column, width: float) -> Column:
@@ -282,43 +325,3 @@ def _salted_bucket_join(
         "inner",
     ).filter(exact)
     return joined.select(*out_cols)
-
-
-def _try_fuzzy_fast_path(
-    left: DataFrame,
-    right: DataFrame,
-    lval: Column,
-    rval: Column,
-    tol_cmp,
-    out_cols,
-) -> Tuple[Optional[DataFrame], object]:
-    """Range pre-check mirroring the reference's always-on ineq
-    short-circuit (``pandance/pandance.py:792-807``) adapted to
-    tolerance matching: if the value ranges are further than ``tol``
-    apart the result is empty; if the combined span fits within ``tol``
-    every pair matches (full cross product).  One min/max aggregate
-    over both sides — metadata-scale work.  NaN/Inf/NULL are already
-    filtered.  Returns ``(result_or_None, max_abs_value_or_None)``; the
-    second element feeds the band-strategy operating-range check."""
-    lstat, rstat = two_sided_minmax(left, lval, right, rval)
-    if lstat["lo"] is None or rstat["lo"] is None:
-        return left.join(right, F.lit(False), "inner").select(*out_cols), None
-    try:
-        max_abs = max(
-            abs(lstat["lo"]), abs(lstat["hi"]), abs(rstat["lo"]), abs(rstat["hi"])
-        )
-    except TypeError:
-        max_abs = None
-    try:
-        gap = max(rstat["lo"] - lstat["hi"], lstat["lo"] - rstat["hi"])
-        span = max(lstat["hi"], rstat["hi"]) - min(lstat["lo"], rstat["lo"])
-        if gap > tol_cmp:
-            return (
-                left.join(right, F.lit(False), "inner").select(*out_cols),
-                max_abs,
-            )
-        if span <= tol_cmp:
-            return left.crossJoin(right).select(*out_cols), max_abs
-    except TypeError:
-        return None, max_abs
-    return None, max_abs

@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandance_spark._kernel import (
-    sql_literal,
     apply_suffixes,
     band_id,
     is_numeric_type,
@@ -59,6 +58,7 @@ from pandance_spark._kernel import (
     likely_shuffle_join,
     nested_loop_sized,
     numeric_view,
+    quantile_cuts as _quantile_cuts,
     resolve_join_columns,
     salt_count,
     two_sided_minmax,
@@ -162,17 +162,6 @@ def ineq_join(
 
 def _has_numeric_view(dtype: T.DataType) -> bool:
     return is_numeric_type(dtype) or is_timestamp_type(dtype)
-
-
-def _quantile_cuts(value: Column, num_bands: int) -> Column:
-    """Aggregate: the ``num_bands - 1`` interior quantiles of a double
-    column — exactly ``approxQuantile(probs, 0.001)``: NaN (and NULL)
-    left out, accuracy ``1 / 0.001``.  The probabilities are one SQL
-    array so the plan's driver calls do not grow with ``num_bands``."""
-    probs = ", ".join(sql_literal(i / num_bands) for i in range(1, num_bands))
-    return F.percentile_approx(
-        F.when(~F.isnan(value), value), F.expr(f"array({probs})"), 1000
-    )
 
 
 def _pick_strategy(
@@ -286,7 +275,7 @@ def _string_cuts(
     The distributed analog of the reference's claim that ``ineq_join``
     works on any comparable type (sort + bisect over arbitrary
     orderables, ``pandance/pandance.py:625,731-754``).  Earlier rounds
-    mapped strings onto a packed-codepoint double so approxQuantile
+    mapped strings onto a packed-codepoint double so a double quantile
     could run on them; that packing reads only 3 codepoints past the
     min/max common prefix, and adversarial keys (divergent first
     character, long shared middle, rare suffix) collapse it to a
@@ -351,8 +340,8 @@ def _band_join(
     band(v) = #cuts <= v (:func:`pandance_spark._kernel.band_id`).  For
     numeric/timestamp keys ``raw_cuts`` are the right side's quantiles,
     which the caller computed in its statistics aggregate
-    (:func:`_quantile_cuts`); string keys cut on a bounded value sample
-    (:func:`_string_cuts`).
+    (:func:`pandance_spark._kernel.quantile_cuts`); string keys cut on
+    a bounded value sample (:func:`_string_cuts`).
     Bands are value-ordered intervals, so for ``<``/``<=`` a pair with
     band_l < band_r is guaranteed to match and only the diagonal needs
     the exact predicate (the distributed analog of the reference's

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandance_spark._kernel import QUANTILE_UNSUPPORTED as _QUANTILE_UNSUPPORTED
-from pandance_spark._kernel import band_id, numeric_view
+from pandance_spark._kernel import band_id, numeric_view, quantile_cuts
 
 __all__ = ["overlap_join", "range_lookup", "merge_intervals"]
 
@@ -89,10 +89,11 @@ def overlap_join(
     def view(df: DataFrame, col: str):
         return numeric_view(F.col(col), df.schema[col].dataType)
 
-    probs = [i / num_bands for i in range(1, num_bands)]
-    rnum = right2.select(view(right2, rs).alias("__v")).dropna()
     try:
-        cuts = sorted(set(rnum.approxQuantile("__v", probs, 0.001)))
+        raw = right2.select(
+            quantile_cuts(view(right2, rs).cast("double"), num_bands)
+        ).first()[0]
+        cuts = sorted(set(raw or ()))
     except _QUANTILE_UNSUPPORTED:
         # un-quantilable column -> conditional-join fallback is the
         # plan; execution errors propagate (see _kernel note)

@@ -761,9 +761,10 @@ def _q20(vec: Column, dim: int) -> Column:
     LONG, which wraps (non-ANSI) or throws ARITHMETIC_OVERFLOW (ANSI,
     the Spark 4.x default) once ``|q| > sqrt(2^63/dim)/2`` — so
     vectors beyond that bound poison to NULL and are EXCLUDED, never
-    a crash or a silent wrong cluster (the same philosophy as
-    fuzzy_join's 2^51 operating-range guard).  At dim 64 the bound is
-    |x| ~ 162; the micro-unit convention sits ~100x inside it."""
+    a crash or a silent wrong cluster.  (fuzzy_join, by contrast,
+    keeps rows past its 2^51 band bound: it routes them to an exact
+    branch.)  At dim 64 the bound is |x| ~ 162; the micro-unit
+    convention sits ~100x inside it."""
     import math as _m
 
     qmax = float(int(_m.sqrt((2**63 - 1) / dim) / 2))

@@ -1621,81 +1621,32 @@ def streaming_fuzzy_join(
     Plan: the batch band-bucket rewrite IS a stream-static equi-join
     Spark supports natively — the static side is exploded once into
     its ±2 neighbor buckets (``floor(v/tol) + i``), the stream side
-    computes its single bucket statelessly, and the exact
-    ``abs(l - r) <= tol`` predicate rides the join.  No state store:
-    a stream-static inner join keeps nothing between micro-batches,
-    and a broadcast-sized static side makes each micro-batch a
-    map-only broadcast hash join (the 100 TB shape: dimension
-    broadcast, stream never shuffles).
+    computes its single bucket statelessly, and the exact predicate
+    rides the join.  No state store: a stream-static inner join keeps
+    nothing between micro-batches, and a broadcast-sized static side
+    makes each micro-batch a map-only broadcast hash join (the 100 TB
+    shape: dimension broadcast, stream never shuffles).
 
-    Operating-range guard: ``floor(v/tol)`` in double drops matches
-    past ``|v|/tol ~ 2^51``; the static side is checked with one
-    min/max job (raises, same contract as batch ``strategy='band'``),
-    and stream values are subject to the same published bound —
-    rescale upstream if the stream can exceed it.
+    Rows past the band's ``|v|/tol ~ 2^51`` operating bound are routed
+    per row, as in batch, to an exact branch that joins them against
+    the broadcast static side; there is no static-side job and no
+    raise, and no magnitude loses matches.
     """
-    from pandance_spark._kernel import (
-        apply_suffixes,
-        as_instant,
-        finite_filter,
-        resolve_join_columns,
-        tolerance_to_micros,
-        validate_fuzzy_types,
-        validate_tol_value,
-    )
-    from pandance_spark.operators.fuzzy import (
-        _MAX_BUCKET_QUOTIENT,
-        _bucket_sides,
-    )
+    from pandance_spark.operators.fuzzy import _bucket_sides, _prepare, _route
 
-    left_on, right_on = resolve_join_columns(
-        stream, static, on, left_on, right_on
+    left2, right2, out_cols, lval, rval, exact, width = _prepare(
+        stream, static, on, left_on, right_on, tol, suffixes
     )
-    mode = validate_fuzzy_types(
-        stream.schema[left_on].dataType, static.schema[right_on].dataType, tol
-    )
-    validate_tol_value(tol)
-
-    stream = finite_filter(stream, left_on)
-    static = finite_filter(static, right_on)
-    left2, right2, lcol, rcol = apply_suffixes(
-        stream, static, left_on, right_on, suffixes
-    )
-    out_cols = [*left2.columns, *right2.columns]
-
-    if mode == "timestamp":
-        tol_us = tolerance_to_micros(tol)
-        lval = F.unix_micros(as_instant(left2[lcol]))
-        rval = F.unix_micros(as_instant(right2[rcol]))
-        tol_lit = F.lit(tol_us)
-        bucket_width = float(tol_us)
-    else:
-        tol_lit = F.lit(tol)
-        bucket_width = float(tol)
-        lval, rval = left2[lcol], right2[rcol]
-    exact = F.abs(lval - rval) <= tol_lit
-
-    if bucket_width == 0.0:
+    if width == 0.0:
         # tol == 0 degenerates to an exact stream-static equi-join
         return left2.join(right2, lval == rval, "inner").select(*out_cols)
 
-    # one bounded batch job on the static side only (the stream side
-    # cannot be scanned) — same raise contract as batch strategy='band'
-    mm = right2.agg(F.max(F.abs(rval)).alias("m")).first()
-    if (
-        mm is not None
-        and mm["m"] is not None
-        and float(mm["m"]) / bucket_width > _MAX_BUCKET_QUOTIENT
-    ):
-        raise ValueError(
-            "streaming band join out of operating range: static "
-            f"|value|/tol ~ {float(mm['m']) / bucket_width:.2e} exceeds "
-            "2^51, floor(v/tol) in double would drop matches; rescale "
-            "the values"
-        )
-
-    lb, rb = _bucket_sides(left2, right2, lval, rval, bucket_width)
-    return lb.join(rb, "__bucket", "inner").filter(exact).select(*out_cols)
+    left_safe, right_safe, out_of_range = _route(
+        left2, right2, lval, rval, width, exact, out_cols
+    )
+    lb, rb = _bucket_sides(left_safe, right_safe, lval, rval, width)
+    band = lb.join(rb, "__bucket", "inner").filter(exact).select(*out_cols)
+    return band.unionAll(out_of_range)
 
 
 def streaming_ineq_join(

@@ -215,8 +215,9 @@ def test_fuzzy_band_heavy_duplicates(spark):
 
 
 def test_fuzzy_disjoint_fast_path_empty_and_cross(spark):
-    # r2: range pre-check ON by default, mirroring the reference's
-    # always-on short-circuit (pandance.py:792-807)
+    # the inputs a min/max short-circuit would catch (the reference
+    # has one for ineq only, pandance.py:792-807): disjoint ranges and
+    # a combined span within tol go through the ordinary plan
     left = spark.createDataFrame(
         [("a", 1.0), ("b", 2.0)], "item string, v double"
     )
@@ -226,18 +227,14 @@ def test_fuzzy_disjoint_fast_path_empty_and_cross(spark):
     empty = fuzzy_join(left, right, on="v", tol=0.5)
     assert empty.count() == 0
     assert set(empty.columns) == {"item_x", "v_x", "item_y", "v_y"}
-    plan = empty._jdf.queryExecution().optimizedPlan().toString()
-    assert "__bucket" not in plan  # no band machinery was planned
 
-    # combined span within tol -> full cross product, again no matching
+    # combined span within tol -> full cross product
     tight_l = spark.createDataFrame([("a", 1.00), ("b", 1.01)], "item string, v double")
     tight_r = spark.createDataFrame([("x", 1.02), ("y", 1.03)], "item string, v double")
     full = fuzzy_join(tight_l, tight_r, on="v", tol=0.1)
     assert full.count() == 4
-    plan = full._jdf.queryExecution().optimizedPlan().toString()
-    assert "__bucket" not in plan
 
-    # overlapping-but-not-degenerate ranges: fast path must NOT fire
+    # overlapping-but-not-degenerate ranges
     mid_r = spark.createDataFrame([("x", 1.4), ("y", 9.9)], "item string, v double")
     out = fuzzy_join(left, right.union(mid_r), on="v", tol=1.0)
     got = {(r["v_x"], r["v_y"]) for r in out.collect()}
@@ -261,20 +258,90 @@ def test_fuzzy_fast_path_decimal_boundary(spark):
 
 def test_fuzzy_extreme_quotient_guard(spark):
     # |v|/tol ~ 1e22 >> 2^51: floor(v/tol) in double is off by far more
-    # than the +-2 bucket margin, so band would silently drop matches.
-    # auto must reroute to the exact range strategy; an explicit band
-    # request must raise (contract violation, not silent rewrite).
+    # than the +-2 bucket margin, so these rows must take the exact
+    # branch; band returns exactly the range result.
     big = 1.0e18
     vals = [(1, big), (2, big + 256.0), (3, big + 512.0)]
     left = spark.createDataFrame(vals, "id long, v double")
     right = spark.createDataFrame(vals, "id long, v double")
     out = fuzzy_join(left, right, on="v", tol=1e-4, strategy="auto")
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "__bucket" not in plan  # guard rerouted auto -> range
     got = {(r["id_x"], r["id_y"]) for r in out.collect()}
     assert got == {(1, 1), (2, 2), (3, 3)}
-    with pytest.raises(ValueError, match="operating range"):
-        fuzzy_join(left, right, on="v", tol=1e-4, strategy="band")
+    band = fuzzy_join(left, right, on="v", tol=1e-4, strategy="band")
+    rng = fuzzy_join(left, right, on="v", tol=1e-4, strategy="range")
+    key = ["id_x", "id_y"]
+    assert sorted(map(tuple, band.select(*key).collect())) == sorted(
+        map(tuple, rng.select(*key).collect())
+    )
+
+
+@pytest.mark.parametrize("skew_salting", ["never", "always"])
+@pytest.mark.parametrize("strategy", ["auto", "band", "range"])
+def test_fuzzy_out_of_range_rows_keep_their_matches(spark, strategy, skew_salting):
+    # a long past 2^51 * tol loses precision in floor(v/tol), and a
+    # decimal(38,0) near 1e30 overflows the bucket id: rows past the
+    # band's operating bound must still find their exact matches
+    kw = dict(on="v", tol=2, strategy=strategy, skew_salting=skew_salting)
+    big = 2**60
+    left = spark.createDataFrame([(big + 127,), (0,)], "v long")
+    right = spark.createDataFrame([(big + 129,), (5,)], "v long")
+    got = rows_set(fuzzy_join(left, right, **kw))
+    assert got == {(big + 127, big + 129)}
+
+    d = decimal.Decimal
+    e30 = 10**30
+    left = spark.createDataFrame(
+        [(d(e30),), (d(-e30 - 2),), (d(7),)], "v decimal(38,0)"
+    )
+    right = spark.createDataFrame(
+        [(d(e30 + 2),), (d(e30 + 3),), (d(-e30),), (d(9),)], "v decimal(38,0)"
+    )
+    got = rows_set(fuzzy_join(left, right, **kw))
+    assert got == {
+        (d(e30), d(e30 + 2)), (d(-e30 - 2), d(-e30)), (d(7), d(9))
+    }
+
+
+@pytest.mark.parametrize("strategy", ["auto", "band", "range"])
+def test_fuzzy_exact_predicate_cannot_overflow(spark, strategy):
+    # opposite-sign longs near +-2^62: l - r overflows a long, and an
+    # overflowing difference is never within tol
+    left = spark.createDataFrame([(2**62 + 1,), (-(2**62),)], "v long")
+    right = spark.createDataFrame([(2**62 + 2,), (-(2**62) - 1,)], "v long")
+    got = rows_set(fuzzy_join(left, right, on="v", tol=2, strategy=strategy))
+    assert got == {(2**62 + 1, 2**62 + 2), (-(2**62), -(2**62) - 1)}
+    # an int difference past 2^31 is still a difference within this tol
+    left = spark.createDataFrame([(2**31 - 1,), (0,)], "v int")
+    right = spark.createDataFrame([(-2,), (-(2**31),)], "v int")
+    got = rows_set(fuzzy_join(left, right, on="v", tol=2**31 + 1, strategy=strategy))
+    assert got == {(2**31 - 1, -2), (0, -2), (0, -(2**31))}
+
+
+def test_fuzzy_out_of_range_branch_is_broadcast_nested_loop(spark):
+    # with broadcasts disabled by size, the exact branch still
+    # broadcasts its filtered near-bound rows: never a cartesian product
+    left = spark.createDataFrame(
+        [(i, float(i)) for i in range(50)] + [(99, 1e18)], "id long, v double"
+    )
+    right = spark.createDataFrame(
+        [(i, float(i) + 0.5) for i in range(50)] + [(99, 1e18)],
+        "id long, v double",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = fuzzy_join(left, right, on="v", tol=1.0, strategy="band")
+        assert len(rows_set(out, ["id_x", "id_y"])) == 100
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "CartesianProduct" not in plan
+    # both inputs of the nested loop keep only the rows past
+    # B - 2*tol = 2^51 - 2, as Spark prints that double
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("> 2.251799813685246E15)") == 2
 
 
 def test_fuzzy_skew_salting_equality(spark):

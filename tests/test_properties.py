@@ -8,7 +8,9 @@ closed-form ineq overlap count A*B + C(L,2) - L^2 holds.
 """
 
 import datetime as _dt
+import decimal as _dec
 import math
+from fractions import Fraction as _Fraction
 
 import pytest
 from hypothesis import HealthCheck, assume, given, settings, strategies as st
@@ -478,8 +480,8 @@ def test_merge_intervals_matches_brute_force(spark, ivs):
 def test_fuzzy_band_equals_range_up_to_operating_guard(spark, base_off, span):
     # r4 verdict item 6: the documented silent-wrong-answer edge of the
     # core operators.  Just BELOW the guard (|v|/tol <= 2^51) band and
-    # range must agree exactly; just ABOVE it, strategy='band' must
-    # raise and 'auto' must fall back to range (same result, no raise).
+    # range must agree exactly; just ABOVE it, rows take the exact
+    # branch, so 'band' and 'auto' both equal range.
     tol = 1.0
     cliff = 1 << 51
     below = [(float(cliff + base_off - i),) for i in range(span + 1)]
@@ -493,19 +495,74 @@ def test_fuzzy_band_equals_range_up_to_operating_guard(spark, base_off, span):
     )
     assert band.count() > 0  # adjacent values within tol really match
 
-    # spaced > tol so neither min/max fast path (empty or full cross
-    # product) short-circuits before the operating-range guard
+    # spaced > tol, past the operating bound
     above = [(float(cliff) * 1.5,), (float(cliff) * 1.5 + 10.0,)]
     l2 = spark.createDataFrame(above, "v double")
     r2 = spark.createDataFrame(above, "v double")
-    with pytest.raises(ValueError, match="operating range"):
-        fuzzy_join(l2, r2, on="v", tol=tol, strategy="band")
-    # auto silently takes the exact path instead
-    auto = fuzzy_join(l2, r2, on="v", tol=tol, strategy="auto")
-    exact = fuzzy_join(l2, r2, on="v", tol=tol, strategy="range")
-    assert sorted(map(tuple, auto.select(*key).collect())) == sorted(
-        map(tuple, exact.select(*key).collect())
-    )
+    exact = sorted(map(tuple, fuzzy_join(
+        l2, r2, on="v", tol=tol, strategy="range").select(*key).collect()))
+    for strategy in ("band", "auto"):
+        got = fuzzy_join(l2, r2, on="v", tol=tol, strategy=strategy)
+        assert sorted(map(tuple, got.select(*key).collect())) == exact
+
+
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+_USEC = _dt.timedelta(microseconds=1)
+
+# fuzzy join value kinds: (schema type, value of n, tol of u, centers).
+# A value is the value of n = sign * center + offset, and tol is the
+# tol of u, so the brute force compares integers: |n_l - n_r| <= u.
+# The "bound" center (times u) sits at the band strategy's 2^51 * tol
+# operating bound, the "huge" one far past it.
+_FUZZY_KINDS = {
+    "long": ("long", int, int, {"bound": 2**51, "huge": 2**62}),
+    "dec0": ("decimal(38,0)", _dec.Decimal, int,
+             {"bound": 2**51, "huge": 10**30}),
+    # from a string, so no decimal context rounds the value
+    "dec6": ("decimal(38,6)", lambda n: _dec.Decimal(f"{n}e-6"),
+             lambda u: _dec.Decimal(f"{u}e-6"), {"bound": 2**51, "huge": 10**31}),
+    "double": ("double", lambda n: n / 4, lambda u: u / 4,
+               {"bound": 2**51, "huge": 2**60}),
+    "timestamp": ("timestamp", lambda n: _EPOCH + n * _USEC, lambda u: u * _USEC,
+                  {"bound": 2**51, "huge": 2**55}),
+}
+
+
+@settings(**_SETTINGS)
+@given(
+    kind=st.sampled_from(sorted(_FUZZY_KINDS)),
+    scale=st.sampled_from(["bound", "huge"]),
+    u=st.integers(1, 4),
+    lrows=st.lists(st.tuples(st.sampled_from([1, -1]), st.integers(-10, 10)),
+                   min_size=1, max_size=6),
+    rrows=st.lists(st.tuples(st.sampled_from([1, -1]), st.integers(-10, 10)),
+                   min_size=1, max_size=6),
+    strategy=st.sampled_from(["auto", "band", "range"]),
+    skew_salting=st.sampled_from(["never", "always"]),
+)
+def test_fuzzy_matches_exact_brute_force_at_any_magnitude(
+    spark, kind, scale, u, lrows, rrows, strategy, skew_salting
+):
+    """Every strategy and salting mode returns exactly the pairs within
+    tol, for values clustered around the band's operating bound and far
+    past it, including opposite-sign values whose difference overflows."""
+    sql_type, value, tol, centers = _FUZZY_KINDS[kind]
+    center = centers[scale] * (u if scale == "bound" else 1)
+
+    def side(rows):
+        ns = [sign * center + off for sign, off in rows]
+        vals = [value(n) for n in ns]
+        # a double rounds n / 4: compare the stored value, exactly
+        return vals, [_Fraction(v) * 4 for v in vals] if kind == "double" else ns
+
+    (lv, ln), (rv, rn) = side(lrows), side(rrows)
+    want = {(i, j) for i, a in enumerate(ln) for j, b in enumerate(rn)
+            if abs(a - b) <= u}
+    left = spark.createDataFrame(list(enumerate(lv)), f"i long, v {sql_type}")
+    right = spark.createDataFrame(list(enumerate(rv)), f"j long, v {sql_type}")
+    out = fuzzy_join(left, right, on="v", tol=tol(u), strategy=strategy,
+                     skew_salting=skew_salting)
+    assert sorted((r["i"], r["j"]) for r in out.collect()) == sorted(want)
 
 
 @settings(**_SETTINGS)
@@ -574,7 +631,7 @@ def test_fuzzy_salted_equals_unsalted_on_random_skew(
     right = spark.createDataFrame(
         [(v, i) for i, v in enumerate(rv)], "v double, rid long"
     )
-    kw = dict(on="v", tol=0.5, disjoint_fast_path=False)
+    kw = dict(on="v", tol=0.5)
     salted = fuzzy_join(left, right, strategy="band",
                         skew_salting="always", **kw)
     rng = fuzzy_join(left, right, strategy="range", **kw)

@@ -1246,19 +1246,29 @@ def test_streaming_fuzzy_join_matches_batch(spark, tmp_path):
 
 
 def test_streaming_fuzzy_join_operating_range_raises(spark, tmp_path):
-    """A static side past |v|/tol ~ 2^51 raises (same contract as
-    batch strategy='band') instead of silently dropping matches."""
+    """A static side past |v|/tol ~ 2^51 neither raises nor drops
+    matches: the streaming result equals the exact batch range join."""
+    from pandance_spark import fuzzy_join
     from pandance_spark.streaming import streaming_fuzzy_join
 
-    src = spark.createDataFrame([(1, 1.0)], "event_id long, val double")
+    src = spark.createDataFrame(
+        [(1, 1.0), (2, 1e13)], "event_id long, val double"
+    )
     path = str(tmp_path / "src2")
     src.write.parquet(path)
     stream = spark.readStream.schema(src.schema).parquet(path)
     static = spark.createDataFrame(
         [(1, 1e13)], "level_id long, val double"
     )
-    with pytest.raises(ValueError, match="operating range"):
-        streaming_fuzzy_join(stream, static, on="val", tol=1e-3)
+    _run_to_memory(
+        streaming_fuzzy_join(stream, static, on="val", tol=1e-3),
+        "sfj_range",
+        "append",
+    )
+    got = sorted(map(tuple, spark.table("sfj_range").collect()))
+    want = sorted(map(tuple, fuzzy_join(
+        src, static, on="val", tol=1e-3, strategy="range").collect()))
+    assert got == want and len(got) == 1
 
 
 def test_streaming_ineq_and_theta_match_batch(spark, tmp_path):
