@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pandance_spark import fuzzy_join, ineq_join, theta_join
-from pandance_spark._kernel import spread_partitions
+from pandance_spark._kernel import run_concurrently, spread_partitions
 from pandance_spark.functions.text import (
     fingerprint_md5,
     lang_id,
@@ -133,15 +133,15 @@ def _q_ineq_band_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ineq_band_autoskew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-skew band join (r6): the RIGHT side has half its rows
     pinned to one value, which collapses ~half the quantile cuts into
-    one fat band no cut refinement can split.  _band_join detects the
-    collapse from the raw cut multiplicity (free — no extra scan) and
-    salts that band across k reducers (operators/ineq.py _hot_bands);
-    the result set is identical to the unsalted plan, which the oracle
-    verifies pair-for-pair.  skew_salting='always' pins the salted
-    plan at this test scale (at sf0.01 both sides broadcast, so the
-    default 'auto' would — correctly — skip the salt as overhead; at
-    100 TB 'auto' engages on its own because neither side fits the
-    broadcast threshold)."""
+    one fat band no cut refinement can split.  ineq's _hot_bands detects
+    the collapse from the raw cut multiplicity (free — no extra scan) and
+    the shared band equi-join (_kernel.band_equijoin) salts that band
+    across k reducers; the result set is identical to the unsalted
+    plan, which the oracle verifies pair-for-pair.
+    skew_salting='always' pins the salted plan at this test scale (at
+    sf0.01 both sides broadcast, so the default 'auto' would —
+    correctly — skip the salt as overhead; at 100 TB 'auto' engages on
+    its own because neither side fits the broadcast threshold)."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     a = ev.filter(F.col("event_id") % 97 == 2)
     b = ev.filter(F.col("event_id") % 7 == 0).withColumn(
@@ -181,7 +181,7 @@ def _q_fuzzy_autoskew(spark: SparkSession, sf_dir: str) -> DataFrame:
     share ONE value, so one bucket key carries their whole mass — a
     single reducer AQE cannot split (a fat bucket is one join KEY).
     skew_salting='always' pins the salted two-sided-cell plan at test
-    scale (operators/fuzzy.py _salted_bucket_join; at sf0.01 both
+    scale (the salt cells of _kernel.band_equijoin; at sf0.01 both
     sides broadcast so 'auto' would — correctly — skip); the oracle
     verifies the result set is exactly the unsalted |l-r| <= tol
     semantics."""
@@ -1869,13 +1869,7 @@ def _q_simhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         return _ngram_jaccard(raw, 0.6)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        cands_f = pool.submit(_cands)
-        truth_f = pool.submit(_truth)
-        cands = cands_f.result()
-        truth = truth_f.result()
+    cands, truth = run_concurrently(_cands, _truth)
     return dedup_eval(cands, truth, n_docs=toks.select("doc_id"))
 
 
@@ -2343,20 +2337,15 @@ def _q_ppl_buckets_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §2.6: both scorers must replay (they ARE the query), but
     # each trains its model behind an eager checkpoint at build time —
     # two driver threads overlap those jobs (same plans, same results).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        kn_f = pool.submit(
-            ppl_buckets, docs, "doc_id", "text", scorer="kn"
-        )
-        uni_f = pool.submit(ppl_buckets, docs, "doc_id", "text")
-        kn = kn_f.result().select(
-            "doc_id", "n_tokens", "cross_entropy", "perplexity",
-            F.col("bucket").alias("bucket_kn"),
-        )
-        uni = uni_f.result().select(
-            "doc_id", F.col("bucket").alias("bucket_uni")
-        )
+    kn, uni = run_concurrently(
+        lambda: ppl_buckets(docs, "doc_id", "text", scorer="kn"),
+        lambda: ppl_buckets(docs, "doc_id", "text"),
+    )
+    kn = kn.select(
+        "doc_id", "n_tokens", "cross_entropy", "perplexity",
+        F.col("bucket").alias("bucket_kn"),
+    )
+    uni = uni.select("doc_id", F.col("bucket").alias("bucket_uni"))
     return kn.join(uni, "doc_id").withColumn(
         "moved", F.col("bucket_kn") != F.col("bucket_uni")
     )
@@ -4312,25 +4301,21 @@ def _q_decontam_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so building them from two driver threads overlaps those jobs
     # (same plans, same results; sharing subtrees would need API
     # changes, overlap does not).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        hits_f = pool.submit(
-            containment_join,
+    hits, spans = run_concurrently(
+        lambda: containment_join(
             bench, docs, "bench_id", "btext", "doc_id", "text",
             shingle_n=13, threshold=0.9,
-        )
-        spans_f = pool.submit(
-            contamination_spans,
+        ),
+        lambda: contamination_spans(
             docs, "doc_id", "text", bench, "bench_id", "btext",
             min_tokens=13,
-        )
-        hits = hits_f.result().select(
-            F.col("query_id").alias("bench_id"),
-            F.col("corpus_id").alias("doc_id"),
-            "containment",
-        )
-        spans = spans_f.result()
+        ),
+    )
+    hits = hits.select(
+        F.col("query_id").alias("bench_id"),
+        F.col("corpus_id").alias("doc_id"),
+        "containment",
+    )
     ev = spans.groupBy(
         F.col("doc_b").alias("s_bench"), F.col("doc_a").alias("s_doc")
     ).agg(

@@ -5,10 +5,13 @@ Spark jobs and wall time of the build alone (no sink).
 
 Runs ``overlap_join(strategy="band")`` and ``ineq_join(strategy="band")``
 at 16 and 64 bands on two cached 3,000-row integer frames (left
-[0, 3000), right [1500, 4500), the ``pandance_joins`` ineq shape) in a
-local[2] session.  Each call is built once to warm up, then 7 times
-measured; the JSON reports the median build time, every build time, the
-py4j commands and jobs of the last build, and the result's row count.
+[0, 3000), right [1500, 4500), the ``pandance_joins`` ineq shape), and
+``fuzzy_join(strategy="band")`` on the ``pandance_joins`` fuzzy shape
+(``perfbench/inputs.py`` seed 7: two cached 30,000-row frames, N(-2, 1)
+against N(2, 1), tol 0.1), in a local[2] session.  Each call is built
+once to warm up, then 7 times measured; the JSON reports the median
+build time and, per measured build, its time, py4j commands and jobs,
+and the result's row count.
 """
 
 import json
@@ -30,7 +33,7 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-from pandance_spark import ineq_join  # noqa: E402
+from pandance_spark import fuzzy_join, ineq_join  # noqa: E402
 from pandance_spark.operators.overlap import overlap_join  # noqa: E402
 
 sent = [0]
@@ -41,6 +44,14 @@ for cls in (py4j.clientserver.ClientServerConnection, py4j.java_gateway.GatewayC
 
     cls.send_command = counted
 
+from perfbench import inputs  # noqa: E402
+
+fuzzy_l, fuzzy_r = (
+    spark.createDataFrame(f).repartition(2).cache()
+    for f in inputs.fuzzy_inputs(7, 30_000)
+)
+fuzzy_l.count()
+fuzzy_r.count()
 left = spark.range(3000).selectExpr("id AS v", "id AS s", "id + 5 AS e").cache()
 right = spark.range(1500, 4500).selectExpr("id AS v", "id AS s", "id + 7 AS e").cache()
 left.count()
@@ -50,19 +61,20 @@ scheduler = spark.sparkContext._jsc.sc().dagScheduler()
 
 def measure(label, build, reps=7):
     build()
-    times = []
+    times, calls, jobs = [], [], []
     for _ in range(reps):
         c0, j0 = sent[0], scheduler.numTotalJobs()
         t0 = time.perf_counter()
         df = build()
         times.append(time.perf_counter() - t0)
-        calls, jobs = sent[0] - c0, scheduler.numTotalJobs() - j0
+        calls.append(sent[0] - c0)
+        jobs.append(scheduler.numTotalJobs() - j0)
     return {
         "call": label,
         "build_s_median": round(statistics.median(times), 4),
         "build_s_all": [round(t, 4) for t in times],
-        "py4j_commands": calls,
-        "jobs": jobs,
+        "py4j_commands_all": calls,
+        "jobs_all": jobs,
         "rows": df.count(),
     }
 
@@ -82,6 +94,10 @@ for nb in (16, 64):
                 num_bands=nb, disjoint_fast_path=fast,
             ),
         ))
+results.append(measure(
+    "fuzzy_join band tol=0.1 (pandance_joins fuzzy shape)",
+    lambda: fuzzy_join(fuzzy_l, fuzzy_r, on="val", tol=inputs.FUZZY_TOL, strategy="band"),
+))
 print(json.dumps({
     "pyspark": __import__("pyspark").__version__,
     "host_cores": os.cpu_count(),

@@ -28,7 +28,7 @@ import datetime as _dt
 import math
 import numbers
 import re as _re
-from typing import Optional, Tuple
+from typing import Callable, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -188,6 +188,70 @@ def band_id(df: DataFrame, value: Column, cuts, name: str) -> DataFrame:
         f" + CASE WHEN {ref} >= {sql_literal(c)} THEN 1 ELSE 0 END" for c in cuts
     )
     return df.withColumn(name, value).withColumn(name, F.expr("0" + terms))
+
+
+def band_equijoin(
+    left: DataFrame,
+    right: DataFrame,
+    lspan: Tuple[Column, Column],
+    rspan: Tuple[Column, Column],
+    keep: Callable[[Column], Column],
+    hot_l: Optional[dict] = None,
+    hot_r: Optional[dict] = None,
+) -> DataFrame:
+    """The banded equi-join of the band planners (fuzzy, ineq, overlap):
+    partition both sides into band ids, equi-join on the band id, then
+    verify each pair with ``keep``.
+
+    Each span ``(lo, hi)`` is the inclusive range of integer band ids a
+    row of that side occupies.  A one-band span (``lo is hi``) is used
+    as it is; any other span is exploded to one row per band (none when
+    ``lo > hi`` or a bound is NULL).  The sides join on ``__band`` (left)
+    = ``__band_r`` (right), so a pair meets once in every band its two
+    spans share, and ``keep(band)`` — handed the meeting band — is both
+    the exact predicate and the rule for which meetings to keep.
+
+    ``hot_l`` / ``hot_r`` map a meeting band to the number of salts the
+    left / right rows in it are split over.  A band with ``S_l`` left and
+    ``S_r`` right salts splits into ``S_l * S_r`` cells: each side
+    scatters its rows over its own salts by a whole-row hash and
+    replicates them across the other side's, so each pair meets in
+    exactly one cell.  Cold bands have one salt per side and behave as
+    the unsalted join; with one map empty this is one-sided salting.
+    AQE cannot do this: a fat band is one join KEY, and partition
+    splitting never subdivides a key.
+
+    Returns the joined, filtered frame with every column of both sides
+    plus the band and salt columns; callers select their output.
+    """
+
+    def banded(df: DataFrame, span, name: str) -> DataFrame:
+        lo, hi = span
+        if lo is hi:
+            return df.withColumn(name, lo)
+        return df.withColumn(name, F.explode(F.when(lo <= hi, F.sequence(lo, hi))))
+
+    def scatter(df: DataFrame, salts: Column, name: str) -> DataFrame:
+        row = F.struct(*[df[c] for c in df.columns])
+        return df.withColumn(name, F.pmod(F.xxhash64(row), salts))
+
+    def replicate(df: DataFrame, salts: Column, name: str) -> DataFrame:
+        return df.withColumn(name, F.explode(F.sequence(F.lit(0), salts - 1)))
+
+    lb, rb = banded(left, lspan, "__band"), banded(right, rspan, "__band_r")
+    on = F.col("__band") == F.col("__band_r")
+    # each side hashes its own rows before either side replicates
+    if hot_l:
+        lb = scatter(lb, salt_count("__band", hot_l), "__salt_l")
+    if hot_r:
+        rb = scatter(rb, salt_count("__band_r", hot_r), "__salt_r")
+    if hot_l:
+        rb = replicate(rb, salt_count("__band_r", hot_l), "__salt_l_t")
+        on = on & (F.col("__salt_l") == F.col("__salt_l_t"))
+    if hot_r:
+        lb = replicate(lb, salt_count("__band", hot_r), "__salt_r_t")
+        on = on & (F.col("__salt_r_t") == F.col("__salt_r"))
+    return lb.join(rb, on, "inner").filter(keep(F.col("__band")))
 
 
 def spread_partitions(df: DataFrame, cap: int = None) -> DataFrame:
@@ -448,16 +512,15 @@ def resolve_join_columns(
 def apply_suffixes(
     left: DataFrame,
     right: DataFrame,
-    left_on: str,
-    right_on: str,
     suffixes: Tuple[str, str] = ("_x", "_y"),
-) -> Tuple[DataFrame, DataFrame, str, str]:
+) -> Tuple[DataFrame, DataFrame, dict, dict]:
     """Rename colliding column names with suffixes, pandas-join style.
 
     Only names present in BOTH inputs are suffixed (reference relies on
     pandas ``DataFrame.join(lsuffix=..., rsuffix=...)``, e.g.
-    ``pandance/pandance.py:207``).  Returns the two renamed frames plus
-    the (possibly renamed) join column names.
+    ``pandance/pandance.py:207``); a suffixed name that collides with an
+    existing column raises.  Returns the two renamed frames plus, per
+    side, the map from every input column name to its output name.
     """
     if not isinstance(suffixes, (tuple, list)) or len(suffixes) != 2:
         raise ValueError("suffixes must be a 2-tuple of strings")
@@ -469,24 +532,18 @@ def apply_suffixes(
             "pass distinct suffixes"
         )
 
-    def _rename(df: DataFrame, suffix: str, other_cols: set) -> Tuple[DataFrame, dict]:
-        mapping = {}
-        existing = set(df.columns)
-        for c in df.columns:
-            if c in common:
-                new = c + suffix
-                if new in existing or new in mapping.values():
-                    raise ValueError(
-                        f"suffixed column name {new!r} collides with an existing column"
-                    )
-                mapping[c] = new
-        if mapping:
-            df = df.withColumnsRenamed(mapping)
-        return df, mapping
-
-    left2, lmap = _rename(left, lsuf, set(right.columns))
-    right2, rmap = _rename(right, rsuf, set(left.columns))
-    return left2, right2, lmap.get(left_on, left_on), rmap.get(right_on, right_on)
+    lmap = {c: c + lsuf if c in common else c for c in left.columns}
+    rmap = {c: c + rsuf if c in common else c for c in right.columns}
+    out = [*lmap.values(), *rmap.values()]
+    clash = sorted({n for n in out if out.count(n) > 1})
+    if clash:
+        raise ValueError(
+            f"suffixed column name {clash[0]!r} collides with an existing column"
+        )
+    if common:
+        left = left.withColumnsRenamed({c: lmap[c] for c in common})
+        right = right.withColumnsRenamed({c: rmap[c] for c in common})
+    return left, right, lmap, rmap
 
 
 def finite_filter(df: DataFrame, col: str) -> DataFrame:
@@ -630,3 +687,21 @@ def stage_expr(df: DataFrame, expr: Column, name: str) -> DataFrame:
     scan-level pruning of the corpus itself.
     """
     return df.withColumn(name, F.explode(F.array(expr)))
+
+
+def run_concurrently(*builds: Callable) -> list:
+    """Call each zero-argument ``build`` on its own driver thread and
+    return their results in order — overlaps the independent eager-
+    checkpoint jobs of a plan being built.  Each thread runs with the
+    caller's Spark local properties (job group, description, scheduler
+    pool) and job tags: PySpark keeps them per thread, so a plain pool
+    thread would submit its jobs outside the caller's job group."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    inherit = inheritable_thread_target(SparkSession.active())
+    with ThreadPoolExecutor(max_workers=len(builds)) as pool:
+        futures = [pool.submit(inherit(b)) for b in builds]
+        return [f.result() for f in futures]

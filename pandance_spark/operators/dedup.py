@@ -111,6 +111,7 @@ __all__ = [
 _PRIME = (1 << 31) - 1
 
 
+from pandance_spark._kernel import run_concurrently  # noqa: E402
 from pandance_spark._kernel import spread_partitions as _spread  # noqa: E402
 
 # Row-memory guard of _guarded_pairs (the hot-key-guarded pairing behind
@@ -2571,8 +2572,6 @@ def minhash_eval(
     # ordered sets / banded signature keys); they are independent
     # given the shared base, so two driver threads let the scheduler
     # back-fill one chain's job tails with the other's tasks.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _truth():
         return _ngram_jaccard(_set_elements(base), threshold)
 
@@ -2587,11 +2586,7 @@ def minhash_eval(
         ).localCheckpoint(eager=True)
         return _banded_pairs(banded, id_col)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        truth_f = pool.submit(_truth)
-        cands_f = pool.submit(_cands)
-        truth = truth_f.result()
-        cands = cands_f.result()
+    truth, cands = run_concurrently(_truth, _cands)
     return dedup_eval(cands, truth, n_docs=base.select("__id"))
 
 

@@ -13,7 +13,11 @@ A pair with ``|l - r| <= tol`` must land in the same or an adjacent
 bucket, so exploding one side to its neighboring buckets and hash-joining
 on bucket id followed by the exact ``|l - r| <= tol`` filter finds
 every match with shuffle-parallel, output-proportional work — no
-interval tree, no O(n*m) scan.
+interval tree, no O(n*m) scan.  The explode, the equi-join, the hot-
+bucket salt cells and the filter are the shared band equi-join of the
+band planners (:func:`pandance_spark._kernel.band_equijoin`); this
+module supplies the bucket ids, the ±2 span, the sampled hot buckets
+and the exact predicate.
 
 Semantics mirrored from the reference (SURVEY.md §1):
 - inclusive tolerance: ``<= tol`` exactly (the reference's epsilon
@@ -57,11 +61,11 @@ from pyspark.sql import types as T
 from pandance_spark._kernel import (
     as_instant,
     apply_suffixes,
+    band_equijoin,
     finite_filter,
     likely_shuffle_join,
     nested_loop_sized,
     resolve_join_columns,
-    salt_count,
     sampled_hot_keys,
     tolerance_to_micros,
     validate_fuzzy_types,
@@ -144,14 +148,13 @@ def fuzzy_join(
     left_safe, right_safe, out_of_range = _route(
         left2, right2, lval, rval, bucket_width, exact, out_cols
     )
-    lb, rb = _bucket_sides(left_safe, right_safe, lval, rval, bucket_width)
-
+    lb, rb = _bucket(lval, bucket_width), _bucket(rval, bucket_width)
     hot_l = hot_r = {}
     if skew_salting == "always" or (
         skew_salting == "auto" and likely_shuffle_join(left2, right2)
     ):
-        hot_l = sampled_hot_keys(left_safe, _bucket(lval, bucket_width))
-        hot_r = sampled_hot_keys(right_safe, _bucket(rval, bucket_width))
+        hot_l = sampled_hot_keys(left_safe, lb)
+        hot_r = sampled_hot_keys(right_safe, rb)
     if hot_r:
         # a hot right VALUE explodes into its ±margin neighbor buckets,
         # so every one of those bucket keys receives the full hot mass;
@@ -164,11 +167,18 @@ def fuzzy_join(
                 k = b + i
                 expanded[k] = max(expanded.get(k, 0), s)
         hot_r = expanded
-    if hot_l or hot_r:
-        band = _salted_bucket_join(lb, rb, hot_l, hot_r, exact, out_cols)
-    else:
-        band = lb.join(rb, "__bucket", "inner").filter(exact).select(*out_cols)
-    return band.unionAll(out_of_range)
+    # each left row sits in its own bucket; each right row spans the
+    # buckets within ±margin of its own, so a pair within tol shares one
+    band = band_equijoin(
+        left_safe,
+        right_safe,
+        (lb, lb),
+        (rb - _BUCKET_MARGIN, rb + _BUCKET_MARGIN),
+        lambda _band: exact,
+        hot_l,
+        hot_r,
+    )
+    return band.select(*out_cols).unionAll(out_of_range)
 
 
 def _prepare(left, right, on, left_on, right_on, tol, suffixes):
@@ -185,14 +195,10 @@ def _prepare(left, right, on, left_on, right_on, tol, suffixes):
     rtype = right.schema[right_on].dataType
     mode = validate_fuzzy_types(ltype, rtype, tol)
     validate_tol_value(tol)
-    left2, right2, lcol, rcol = apply_suffixes(
-        finite_filter(left, left_on),
-        finite_filter(right, right_on),
-        left_on,
-        right_on,
-        suffixes,
+    left2, right2, lmap, rmap = apply_suffixes(
+        finite_filter(left, left_on), finite_filter(right, right_on), suffixes
     )
-    lval, rval = left2[lcol], right2[rcol]
+    lval, rval = left2[lmap[left_on]], right2[rmap[right_on]]
     if mode == "timestamp":
         lval, rval = F.unix_micros(as_instant(lval)), F.unix_micros(as_instant(rval))
         tol = tolerance_to_micros(tol)
@@ -262,66 +268,3 @@ def _route(
 def _bucket(v: Column, width: float) -> Column:
     """Bucket id ``floor(v / width)`` over the double view of ``v``."""
     return F.floor(v.cast("double") / F.lit(width))
-
-
-def _bucket_sides(
-    left: DataFrame, right: DataFrame, lval: Column, rval: Column, width: float
-) -> Tuple[DataFrame, DataFrame]:
-    """The two inputs of the band-bucketed equi-join on ``__bucket``:
-    each left row in its own bucket, each right row exploded into every
-    bucket within ``±_BUCKET_MARGIN`` of its own, so a pair within
-    ``width`` always shares a bucket.  Batch and streaming fuzzy joins
-    both build their buckets here."""
-    rbucket = _bucket(rval, width)
-    return left.withColumn("__bucket", _bucket(lval, width)), right.withColumn(
-        "__bucket",
-        F.explode(
-            F.array(
-                *[
-                    rbucket + F.lit(i)
-                    for i in range(-_BUCKET_MARGIN, _BUCKET_MARGIN + 1)
-                ]
-            )
-        ),
-    )
-
-
-def _salted_bucket_join(
-    lb: DataFrame,
-    rb: DataFrame,
-    hot_l: dict,
-    hot_r: dict,
-    exact: Column,
-    out_cols,
-) -> DataFrame:
-    """Two-sided salt-cell join for hot buckets (identical result set).
-
-    For bucket ``b`` with ``S_l`` left salts and ``S_r`` right salts,
-    the (left x right) work splits into ``S_l * S_r`` cells: each side
-    scatters its own rows by a whole-row hash over its own salt space
-    and replicates across the OTHER side's salt space, so each (l, r)
-    pair meets in exactly one cell.  Replication cost is bounded and
-    targeted — left rows replicate ``S_r(b)``-fold only inside
-    hot-RIGHT buckets (and vice versa); cold buckets have
-    ``S_l = S_r = 1`` and behave exactly as the unsalted join.  When
-    only one side is hot this degenerates to classic one-sided
-    salting.  AQE cannot do this: a fat bucket is one join KEY, and
-    partition-splitting never subdivides a key.
-    """
-    sl_n, sr_n = salt_count("__bucket", hot_l), salt_count("__bucket", hot_r)
-    lbs = lb.withColumn(
-        "__salt_l",
-        F.pmod(F.xxhash64(F.struct(*[lb[c] for c in lb.columns])), sl_n),
-    ).withColumn("__salt_r_t", F.explode(F.sequence(F.lit(0), sr_n - 1)))
-    rbs = rb.withColumn(
-        "__salt_r",
-        F.pmod(F.xxhash64(F.struct(*[rb[c] for c in rb.columns])), sr_n),
-    ).withColumn("__salt_l_t", F.explode(F.sequence(F.lit(0), sl_n - 1)))
-    joined = lbs.join(
-        rbs,
-        (lbs["__bucket"] == rbs["__bucket"])
-        & (lbs["__salt_l"] == rbs["__salt_l_t"])
-        & (lbs["__salt_r_t"] == rbs["__salt_r"]),
-        "inner",
-    ).filter(exact)
-    return joined.select(*out_cols)

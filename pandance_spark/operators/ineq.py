@@ -13,7 +13,11 @@ j > i the match is *guaranteed* by band ordering so no comparison is
 needed at all — only the diagonal (j == i) pairs are filtered exactly.
 This turns the O(n*m)-comparison nested loop into an equi-join on band
 id (shuffle hash / sort-merge under Catalyst) whose work is proportional
-to the output size plus one band of slack.
+to the output size plus one band of slack.  The join itself is the
+shared band equi-join (:func:`pandance_spark._kernel.band_equijoin`):
+each left row spans the bands it can match, each right row sits in its
+own band, hot right bands split into one-sided salt cells, and the
+diagonal rule is the pair filter.
 
 Strategies
 ----------
@@ -46,12 +50,13 @@ from bisect import bisect_right
 from functools import partial
 from typing import Optional, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandance_spark._kernel import (
     apply_suffixes,
+    band_equijoin,
     band_id,
     is_numeric_type,
     is_timestamp_type,
@@ -60,7 +65,6 @@ from pandance_spark._kernel import (
     numeric_view,
     quantile_cuts as _quantile_cuts,
     resolve_join_columns,
-    salt_count,
     two_sided_minmax,
 )
 
@@ -118,9 +122,8 @@ def ineq_join(
     if skew_salting not in ("auto", "always", "never"):
         raise ValueError(f"unknown skew_salting {skew_salting!r}")
     left_on, right_on = resolve_join_columns(left, right, on, left_on, right_on)
-    left2, right2, lcol, rcol = apply_suffixes(
-        left, right, left_on, right_on, suffixes
-    )
+    left2, right2, lmap, rmap = apply_suffixes(left, right, suffixes)
+    lcol, rcol = lmap[left_on], rmap[right_on]
     cond = _OPS[how](left2[lcol], right2[rcol])
     out_cols = [*left2.columns, *right2.columns]
 
@@ -374,54 +377,18 @@ def _band_join(
         # a broadcast-able side means no per-band reducer exists to
         # salt — the machinery would be pure overhead
         hot = {}
+    # hot bands are right-side heavy hitters: only right rows scatter
+    # over salts, and left rows aimed at a hot band replicate per salt
 
-    lb = band_id(left, lval, cuts, "__band_l")
-    rb = band_id(right, rval, cuts, "__band_r")
-
-    if _MATCH_HIGHER[how]:
-        targets = F.sequence(F.col("__band_l"), F.lit(nb))
-    else:
-        targets = F.sequence(F.lit(0), F.col("__band_l"))
-    lb = lb.withColumn("__jband", F.explode(targets))
-
-    diag_only = (F.col("__jband") != F.col("__band_l")) | _OPS[how](
-        lb[lcol], rb[rcol]
-    )
-    if hot:
-        # AUTO-SKEW: a right-side key heavy enough to collapse quantile
-        # cuts makes its band a single fat reducer no cut refinement can
-        # split (equal values are indivisible by value).  Split it by
-        # SALT instead: right rows in a hot band scatter over S_b salt
-        # buckets via a whole-row hash; left rows targeting that band
-        # replicate once per salt value.  Join key (band, salt) spreads
-        # the fat band over S_b reducers; every (l, r) pair still meets
-        # exactly once because each right row holds ONE salt.  Cost:
-        # left replication ×S_b only for rows aimed at hot bands —
-        # proportional to the extra output those rows produce anyway.
-        # (AQE's skew-join split can rescue sort-merge joins, but with
-        # ~num_bands distinct join keys a fat band is one KEY, not one
-        # partition — salting is the only lever that subdivides it.)
-        rb = rb.withColumn(
-            "__salt_r",
-            F.pmod(
-                F.xxhash64(F.struct(*[rb[c] for c in rb.columns])),
-                salt_count("__band_r", hot),
-            ),
-        )
-        lb = lb.withColumn(
-            "__salt",
-            F.explode(
-                F.sequence(F.lit(0), salt_count("__jband", hot) - 1)
-            ),
-        )
-        joined = lb.join(
-            rb,
-            (F.col("__jband") == F.col("__band_r"))
-            & (F.col("__salt") == F.col("__salt_r")),
-            "inner",
-        ).filter(diag_only)
-    else:
-        joined = lb.join(
-            rb, F.col("__jband") == F.col("__band_r"), "inner"
-        ).filter(diag_only)
-    return joined.select(*out_cols)
+    bl, br = F.col("__bl"), F.col("__br")
+    # a left row spans every band it can match; off the diagonal the
+    # band order alone guarantees the match (bisect transitivity)
+    lspan = (bl, F.lit(nb)) if _MATCH_HIGHER[how] else (F.lit(0), bl)
+    return band_equijoin(
+        band_id(left, lval, cuts, "__bl"),
+        band_id(right, rval, cuts, "__br"),
+        lspan,
+        (br, br),
+        lambda band: (band != bl) | _OPS[how](left[lcol], right[rcol]),
+        hot_r=hot,
+    ).select(*out_cols)

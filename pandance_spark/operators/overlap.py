@@ -20,6 +20,11 @@ Spark-first plan — **span banding**:
    (``band == greatest(band(l.start), band(r.start))``) so each pair is
    emitted exactly once even when the overlap spans several bands.
 
+Steps 2-4 are the shared band equi-join of the band planners
+(:func:`pandance_spark._kernel.band_equijoin`), with the predicate and
+the guard as its pair filter; ``range_lookup`` reaches it through
+``overlap_join``.
+
 Work is proportional to (rows x bands-spanned) + true pairs — an
 equi-join shuffle, never O(n*m) comparisons.
 """
@@ -32,7 +37,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandance_spark._kernel import QUANTILE_UNSUPPORTED as _QUANTILE_UNSUPPORTED
-from pandance_spark._kernel import band_id, numeric_view, quantile_cuts
+from pandance_spark._kernel import (
+    apply_suffixes,
+    band_equijoin,
+    band_id,
+    numeric_view,
+    quantile_cuts,
+)
 
 __all__ = ["overlap_join", "range_lookup", "merge_intervals"]
 
@@ -63,16 +74,9 @@ def overlap_join(
         if col not in df.columns:
             raise ValueError(f"column {col!r} not found in {side} DataFrame")
 
-    lsuf, rsuf = suffixes
-    common = set(left.columns) & set(right.columns)
-    if common and lsuf == rsuf:
-        raise ValueError("colliding columns need distinct suffixes")
-    lmap = {c: c + lsuf for c in left.columns if c in common}
-    rmap = {c: c + rsuf for c in right.columns if c in common}
-    left2 = left.withColumnsRenamed(lmap)
-    right2 = right.withColumnsRenamed(rmap)
-    ls, le = lmap.get(left_start, left_start), lmap.get(left_end, left_end)
-    rs, re = rmap.get(right_start, right_start), rmap.get(right_end, right_end)
+    left2, right2, lmap, rmap = apply_suffixes(left, right, suffixes)
+    ls, le = lmap[left_start], lmap[left_end]
+    rs, re = rmap[right_start], rmap[right_end]
     out_cols = [*left2.columns, *right2.columns]
 
     overlap = (left2[ls] <= right2[re]) & (right2[rs] <= left2[le])
@@ -105,19 +109,16 @@ def overlap_join(
     lb = band_id(lb, view(left2, le), cuts, "__be")
     rb = band_id(right2, view(right2, rs), cuts, "__bs_r")
     rb = band_id(rb, view(right2, re), cuts, "__be_r")
-    lb = lb.filter(F.col("__bs") <= F.col("__be")).withColumn(
-        "__band", F.explode(F.sequence("__bs", "__be"))
-    )
-    rb = rb.filter(F.col("__bs_r") <= F.col("__be_r")).withColumn(
-        "__band_r", F.explode(F.sequence("__bs_r", "__be_r"))
-    )
-    # emit each pair exactly once: in the band holding the later start
-    once = F.col("__band") == F.greatest(F.col("__bs"), F.col("__bs_r"))
-    joined = (
-        lb.join(rb, F.col("__band") == F.col("__band_r"), "inner")
-        .filter(once & overlap)
-    )
-    return joined.select(*out_cols)
+    bs, bs_r = F.col("__bs"), F.col("__bs_r")
+    # every interval spans the bands it covers; keep each pair once,
+    # in the band holding the later start
+    return band_equijoin(
+        lb,
+        rb,
+        (bs, F.col("__be")),
+        (bs_r, F.col("__be_r")),
+        lambda band: (band == F.greatest(bs, bs_r)) & overlap,
+    ).select(*out_cols)
 
 
 def merge_intervals(

@@ -104,9 +104,8 @@ def theta_join(
             UserWarning,
         )
     left_on, right_on = resolve_join_columns(left, right, on, left_on, right_on)
-    left2, right2, lcol, rcol = apply_suffixes(
-        left, right, left_on, right_on, suffixes
-    )
+    left2, right2, lmap, rmap = apply_suffixes(left, right, suffixes)
+    lcol, rcol = lmap[left_on], rmap[right_on]
     out_cols = [*left2.columns, *right2.columns]
 
     pred, is_udf = _build_predicate(condition, left2[lcol], right2[rcol])

@@ -1618,35 +1618,36 @@ def streaming_fuzzy_join(
     22-208`` apply unchanged (inner join, NaN/Inf dropped, ``suffixes``
     on overlapping names, numeric/timestamp/decimal tolerance matrix).
 
-    Plan: the batch band-bucket rewrite IS a stream-static equi-join
-    Spark supports natively — the static side is exploded once into
-    its ±2 neighbor buckets (``floor(v/tol) + i``), the stream side
-    computes its single bucket statelessly, and the exact predicate
-    rides the join.  No state store: a stream-static inner join keeps
-    nothing between micro-batches, and a broadcast-sized static side
-    makes each micro-batch a map-only broadcast hash join (the 100 TB
-    shape: dimension broadcast, stream never shuffles).
+    Plan: the batch band join (``fuzzy_join(strategy="band",
+    skew_salting="never")``) IS a stream-static equi-join Spark
+    supports natively — the shared band equi-join
+    (:func:`pandance_spark._kernel.band_equijoin`) explodes the static
+    side once into its ±2 neighbor buckets (``floor(v/tol) + i``), the
+    stream side computes its single bucket statelessly, and the exact
+    predicate rides the join.  No state store: a stream-static inner
+    join keeps nothing between micro-batches, and a broadcast-sized
+    static side makes each micro-batch a map-only broadcast hash join
+    (the 100 TB shape: dimension broadcast, stream never shuffles).
+    Salting is off: its hot-key sample would be a job over the stream.
 
     Rows past the band's ``|v|/tol ~ 2^51`` operating bound are routed
     per row, as in batch, to an exact branch that joins them against
     the broadcast static side; there is no static-side job and no
     raise, and no magnitude loses matches.
     """
-    from pandance_spark.operators.fuzzy import _bucket_sides, _prepare, _route
+    from pandance_spark.operators.fuzzy import fuzzy_join
 
-    left2, right2, out_cols, lval, rval, exact, width = _prepare(
-        stream, static, on, left_on, right_on, tol, suffixes
+    return fuzzy_join(
+        stream,
+        static,
+        on=on,
+        left_on=left_on,
+        right_on=right_on,
+        tol=tol,
+        suffixes=suffixes,
+        strategy="band",
+        skew_salting="never",
     )
-    if width == 0.0:
-        # tol == 0 degenerates to an exact stream-static equi-join
-        return left2.join(right2, lval == rval, "inner").select(*out_cols)
-
-    left_safe, right_safe, out_of_range = _route(
-        left2, right2, lval, rval, width, exact, out_cols
-    )
-    lb, rb = _bucket_sides(left_safe, right_safe, lval, rval, width)
-    band = lb.join(rb, "__bucket", "inner").filter(exact).select(*out_cols)
-    return band.unionAll(out_of_range)
 
 
 def streaming_ineq_join(

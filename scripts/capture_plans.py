@@ -1,8 +1,8 @@
 """Capture .explain("formatted") output for declared queries into
-plans/r11/<query>_<tag>.txt — the optimization round's before/after
-evidence files.
+plans/<round>/<query>_<tag>.txt — before/after evidence files for a
+change to the plans.
 
-Usage: python scripts/capture_plans_r11.py <tag> [query ...]
+Usage: python scripts/capture_plans.py <round> <tag> [query ...]
        (no query args = the default heavy-hitter list)
 """
 
@@ -48,14 +48,16 @@ DEFAULT = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or DEFAULT
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    round_, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or DEFAULT
 
     from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("capture_plans_r11")
+        .appName(f"capture_plans_{round_}")
         .config("spark.sql.shuffle.partitions", str(CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -73,7 +75,7 @@ def main() -> None:
     outdir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r11",
+        round_,
     )
     os.makedirs(outdir, exist_ok=True)
     for name in names:

@@ -1,11 +1,14 @@
 """``_kernel.band_id`` boundaries: the band of a value is
 ``bisect_right(cuts, value)``, and the one-expression SQL form agrees
-row for row with the Column-API chain of CASE WHENs it replaced."""
+row for row with the Column-API chain of CASE WHENs it replaced.  The
+shared band equi-join (``_kernel.band_equijoin``) and its salt cells
+agree with a brute force over the band spans."""
 
 import datetime as dt
 import math
 from bisect import bisect_right
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,3 +116,77 @@ def test_salt_count_matches_dict_lookup(spark):
             for r in df.select("i", salt_count(col, h).alias("s")).collect()
         }
         assert got == {i: h.get(v, 1) for i, v in enumerate(values)}
+
+
+# band_equijoin inputs: duplicate rows on both sides, NULL band ids,
+# empty spans (lo > hi) and spans of one and of several bands
+JOIN_LEFT = [
+    (1, 0, 0, 5), (2, 0, 3, 1), (3, 2, 2, 7), (3, 2, 2, 7),
+    (4, None, 2, 3), (5, 3, 1, 4), (6, 1, 4, 2), (7, 2, None, 0),
+]
+JOIN_RIGHT = [
+    (10, 0, 2, 3), (11, 2, 2, 6), (11, 2, 2, 6), (12, 1, 1, 0),
+    (13, None, None, 1), (14, 3, 5, 9), (15, 4, 2, 2), (16, 2, 4, 8),
+]
+JOIN_KEEPS = {
+    "all": (lambda band: F.lit(True), lambda b, l, r: True),
+    # overlap's rule: each pair once, in the band of the later start
+    "once": (
+        lambda band: band == F.greatest(F.col("llo"), F.col("rlo")),
+        lambda b, l, r: b == max(l[1], r[1]),
+    ),
+    # ineq's rule: off the left row's own band every pair matches
+    "diag": (
+        lambda band: (band != F.col("llo")) | (F.col("lv") < F.col("rv")),
+        lambda b, l, r: b != l[1] or l[3] < r[3],
+    ),
+}
+
+
+@pytest.mark.parametrize("single_left", [True, False])
+@pytest.mark.parametrize(
+    "hot_l, hot_r",
+    [({}, {}), ({2: 5, 0: 2}, {}), ({}, {2: 3, 1: 4}), ({2: 5, 0: 2}, {2: 3, 3: 4})],
+)
+def test_band_equijoin_matches_brute_force(spark, single_left, hot_l, hot_r):
+    # every (left row, right row, shared band) that keep() accepts, with
+    # its multiplicity, against a Python brute force over the spans
+    from collections import Counter
+
+    from pandance_spark._kernel import band_equijoin
+
+    left = spark.createDataFrame(JOIN_LEFT, "lid int, llo long, lhi long, lv int")
+    right = spark.createDataFrame(JOIN_RIGHT, "rid int, rlo long, rhi long, rv int")
+    llo = F.col("llo")
+    lspan = (llo, llo) if single_left else (llo, F.col("lhi"))
+
+    def bands(lo, hi):
+        return [] if lo is None or hi is None else range(lo, hi + 1)
+
+    for name, (keep, keep_py) in JOIN_KEEPS.items():
+        out = band_equijoin(
+            left, right, lspan, (F.col("rlo"), F.col("rhi")), keep, hot_l, hot_r
+        )
+        got = Counter(
+            (r["lid"], r["rid"], r["__band"])
+            for r in out.select("lid", "rid", "__band").collect()
+        )
+        want = Counter(
+            (l[0], r[0], b)
+            for l in JOIN_LEFT
+            for r in JOIN_RIGHT
+            for b in set(bands(l[1], l[1] if single_left else l[2]))
+            & set(bands(r[1], r[2]))
+            if keep_py(b, l, r)
+        )
+        assert got == want, name
+        if name == "once":
+            # each pair of rows meets once, however many bands it shares
+            dups_l, dups_r = Counter(l[0] for l in JOIN_LEFT), Counter(
+                r[0] for r in JOIN_RIGHT
+            )
+            pairs = Counter((lid, rid) for lid, rid, _ in got.elements())
+            assert all(n == dups_l[a] * dups_r[b] for (a, b), n in pairs.items())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("__salt_l" in plan) == bool(hot_l), name
+        assert ("__salt_r" in plan) == bool(hot_r), name

@@ -58,11 +58,23 @@ def test_minhash_signature_shape_and_determinism(docs_with_dups):
 
 def _build_jobs(spark, build):
     """(result of ``build()``, jobs it ran): the eager-checkpoint jobs
-    paid while the plan is built, before anything executes it."""
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    paid while the plan is built, before anything executes it.  The
+    build runs under a job group, and every one of its jobs, on
+    whichever driver thread, must carry that group."""
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    group = f"build_jobs_{scheduler.numTotalJobs()}"
     before = scheduler.numTotalJobs()
-    out = build()
-    return out, scheduler.numTotalJobs() - before
+    sc.setJobGroup(group, "plan build")
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = scheduler.numTotalJobs() - before
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    return out, jobs
 
 
 def test_minhash_dedup_finds_near_dups(spark, docs_with_dups):

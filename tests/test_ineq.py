@@ -404,7 +404,7 @@ def test_ineq_band_build_jobs_and_plan(spark, fast_path):
     qe = out._jdf.queryExecution()
     assert "lambdafunction" not in qe.analyzed().toString().lower()
     assert re.search(
-        r"(BroadcastHash|SortMerge|ShuffledHash)Join \[__jband#\d+\], "
+        r"(BroadcastHash|SortMerge|ShuffledHash)Join \[__band#\d+\], "
         r"\[__band_r#\d+\]",
         qe.executedPlan().toString(),
     ), qe.executedPlan().toString()

@@ -221,3 +221,23 @@ def test_range_lookup_point_in_range(spark):
         for r in range_lookup(facts, dims2, "v", "lo", "hi").collect()
     }
     assert got2 == {(1, "a"), (1, "b"), (2, "a"), (2, "b")}
+
+
+def test_overlap_suffix_collision_raises(spark):
+    # a suffixed name that collides with an existing column is a clear
+    # ValueError (as in ineq_join), not an ambiguous reference
+    from pandance_spark.operators.overlap import range_lookup
+
+    left = spark.createDataFrame([(1, 3, 0, 0)], "s long, e long, a long, a_x long")
+    right = spark.createDataFrame([(2, 4, 0)], "s2 long, e2 long, a long")
+    for strategy in ("bnl", "band"):
+        with pytest.raises(ValueError, match="'a_x' collides"):
+            overlap_join(left, right, "s", "e", "s2", "e2", strategy=strategy)
+    facts = spark.createDataFrame([(2, 0, 0)], "v long, a long, a_x long")
+    with pytest.raises(ValueError, match="'a_x' collides"):
+        range_lookup(facts, right, "v", "s2", "e2")
+    # a suffixed name may not collide with the other side's column either
+    right2 = spark.createDataFrame([(2, 4, 0, 0)], "s2 long, e2 long, a long, a_x long")
+    left2 = spark.createDataFrame([(1, 3, 0)], "s long, e long, a long")
+    with pytest.raises(ValueError, match="'a_x' collides"):
+        overlap_join(left2, right2, "s", "e", "s2", "e2", strategy="bnl")
