@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from pandance_spark._kernel import QUANTILE_UNSUPPORTED as _QUANTILE_UNSUPPORTED
 from pandance_spark._kernel import (
+    apply_suffixes,
     band_id,
     is_timestamp_type,
     numeric_view,
@@ -86,16 +87,9 @@ def asof_join(
             raise ValueError(f"by-column {k!r} missing from an input")
 
     # suffix only non-by collisions; by-keys merge into one output column
-    lcols = [c for c in left.columns]
-    rcols_payload = [c for c in right.columns if c not in by]
-    lsuf, rsuf = suffixes
-    collisions = (set(lcols) & set(rcols_payload)) - set(by)
-    lmap = {c: c + lsuf for c in collisions}
-    rmap = {c: c + rsuf for c in collisions}
-    left2 = left.withColumnsRenamed(lmap)
-    right2 = right.withColumnsRenamed(rmap)
-    lts = lmap.get(left_on, left_on)
-    rts = rmap.get(right_on, right_on)
+    left2, _, lmap, rmap = apply_suffixes(left, right.drop(*by), suffixes)
+    right2 = right.withColumnsRenamed({c: n for c, n in rmap.items() if n != c})
+    lts, rts = lmap[left_on], rmap.get(right_on, right_on)
 
     ltype = left2.schema[lts].dataType
     rtype = right2.schema[rts].dataType

@@ -1775,6 +1775,7 @@ def streaming_asof_join(
     arbitrary (the pandas contract), as in batch.
     """
     from pandance_spark._kernel import (
+        apply_suffixes,
         as_instant,
         is_timestamp_type,
         resolve_join_columns,
@@ -1803,14 +1804,9 @@ def streaming_asof_join(
 
     # suffix only non-by collisions; by-keys merge into one output
     # column (same contract as batch asof_join)
-    lcols = list(stream.columns)
-    rcols_payload = [c for c in static.columns if c not in by]
-    lsuf, rsuf = suffixes
-    collisions = (set(lcols) & set(rcols_payload)) - set(by)
-    left2 = stream.withColumnsRenamed({c: c + lsuf for c in collisions})
-    right2 = static.withColumnsRenamed({c: c + rsuf for c in collisions})
-    lts = left_on + lsuf if left_on in collisions else left_on
-    rts = right_on + rsuf if right_on in collisions else right_on
+    left2, _, lmap, rmap = apply_suffixes(stream, static.drop(*by), suffixes)
+    right2 = static.withColumnsRenamed({c: n for c, n in rmap.items() if n != c})
+    lts, rts = lmap[left_on], rmap.get(right_on, right_on)
     ltype = left2.schema[lts].dataType
     rtype = right2.schema[rts].dataType
     out_left_cols = list(left2.columns)

@@ -38,30 +38,15 @@ def main():
     ap.add_argument("--json", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
+    from host_session import host_session
     from pandance_spark.operators.dedup import (
         dedup_substrings,
         fingerprint_overlap_join,
     )
 
-    # size the local session to the host: every core, two shuffle
-    # partitions per core, and a driver heap of a quarter of physical
-    # memory (1-16 GB) so the probe leaves room for the OS and Python
-    cores = len(os.sched_getaffinity(0))
-    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
-    heap_gb = max(1, min(16, ram_gb // 4))
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(2 * cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", f"{heap_gb}g")
-        .getOrCreate()
-    )
-    print(f"local[{cores}], driver heap {heap_gb} GB", flush=True)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = host_session()
 
     def corpus(n_docs: int):
         # unique filler (doc-id-salted tokens) + one shared boilerplate

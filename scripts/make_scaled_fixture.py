@@ -79,17 +79,9 @@ def main():
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
-    from pyspark.sql import SparkSession
+    from host_session import host_session
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = host_session()
     make_scaled_fixture(spark, out, src, factor)
     print(f"scaled fixture ready at {out} ({factor}x {src})")
 

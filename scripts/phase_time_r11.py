@@ -5,7 +5,7 @@ construction + analysis), (b) OPTIMIZE (optimizedPlan force), and
 (c) EXECUTE (noop write).  Repeats REPS times, reports medians.
 
 Usage: SPARK_GRAFT_BENCH_ONLY=a,b,c python scripts/phase_time_r11.py
-       (no env = the full bench headline list)
+       (no env = every queries() entry)
 """
 
 from __future__ import annotations

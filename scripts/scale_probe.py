@@ -40,19 +40,10 @@ def main():
     ap.add_argument("--max-ratio", type=float, default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as e
+    from host_session import host_session
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = host_session()
 
     sfs = []
     for s in args.sfs.split(","):

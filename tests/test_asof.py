@@ -147,6 +147,28 @@ def test_asof_validation(spark):
         asof_join(df, df, on="t", by=["missing"])
 
 
+def test_asof_suffix_collision_raises(spark, tmp_path):
+    # a suffixed name that collides with an existing column is a clear
+    # ValueError (as in the other joins), batch and streaming alike;
+    # by-keys are never suffixed and merge into one output column
+    from pandance_spark.streaming import streaming_asof_join
+
+    left = spark.createDataFrame([(1, 0, 0)], "t long, a long, a_x long")
+    right = spark.createDataFrame([(1, 0)], "t2 long, a long")
+    stream = spark.readStream.schema(left.schema).parquet(str(tmp_path))
+    with pytest.raises(ValueError, match="'a_x' collides"):
+        asof_join(left, right, left_on="t", right_on="t2")
+    with pytest.raises(ValueError, match="'a_x' collides"):
+        streaming_asof_join(stream, right, left_on="t", right_on="t2")
+
+    keyed = spark.createDataFrame([(1, 0, 0)], "t long, k long, a long")
+    dim = spark.createDataFrame([(1, 0, 0)], "t long, k long, a long")
+    want = ["t_x", "k", "a_x", "t_y", "a_y"]
+    assert asof_join(keyed, dim, on="t", by=["k"]).columns == want
+    keyed_stream = spark.readStream.schema(keyed.schema).parquet(str(tmp_path))
+    assert streaming_asof_join(keyed_stream, dim, on="t", by=["k"]).columns == want
+
+
 def _brute_nearest(left_rows, right_rows):
     # (ts, id) rows; returns {left_id: right_id or None}; ties -> backward
     out = {}
