@@ -1,5 +1,6 @@
 """Benchmark harness: every queries() entry at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus exact replicas
+/root/testdata/sf0.1) on the host-sized session of scripts/harness.py
+($SPARK_GRAFT_CPUS cores, $SPARK_GRAFT_MEM heap), plus exact replicas
 of the reference's two published workloads (BASELINE.md):
 
 - Workload F: fuzzy_join of two 10k N(+-2,1) samples, tol=0.1
@@ -20,8 +21,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from scripts.harness import release_blocks, session, settings  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _consume(df) -> int:
@@ -147,25 +149,7 @@ WORKLOADS = (
 
 
 def main():
-    # 32 python workers each spinning a multi-threaded BLAS thrashes the
-    # box; the matrices here are small — one BLAS thread per worker
-    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("pandance_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("pandance_spark_bench")
 
     import __spark_entry__ as entrymod
 
@@ -205,39 +189,14 @@ def main():
     # warmup gets evicted by intervening queries' compiled stages and
     # the big dedup expressions re-compile INSIDE timed runs — observed
     # as bimodal 2-4x swings on dedup_ngram_jaccard/dedup_minhash
-    # per-query cleanup barrier (untimed): drop Python refs and request
-    # a JVM GC so the ContextCleaner evicts the previous queries'
-    # localCheckpoint/broadcast blocks BEFORE the next timed run.
-    # Without it, accumulated blocks inflate later queries 2-3x
-    # (measured: dedup_clusters 4.0 s with the barrier vs 9.4 s when
-    # run third without it) — the r3 bench's +86-292 % "regressions" on
-    # late sub-2 s queries were this accumulation, not the queries.
-    import gc
-
-    def _barrier():
-        # 1. drop Python-side refs so the ContextCleaner may collect
-        gc.collect()
-        # 2. explicitly release EVERY persistent block the previous
-        # query left behind (caches + localCheckpoint RDD blocks).
-        # Relying on GC + ContextCleaner alone is not enough: cleanup
-        # is asynchronous, so stale blocks survive into later queries,
-        # evict THEIR cached inputs, and force recomputes — observed
-        # as 2-6x tail spikes on the baseline workloads whose cached
-        # createDataFrame inputs re-serialize from the driver when
-        # evicted.  Queries never share state across iterations, so a
-        # full sweep between them is always safe.
-        try:
-            spark.catalog.clearCache()
-            it = (
-                spark.sparkContext._jsc.getPersistentRDDs()
-                .values()
-                .iterator()
-            )
-            while it.hasNext():
-                it.next().unpersist(False)
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+    # per-query cleanup barrier (untimed): release every block the
+    # previous queries left before the next timed run.  Without it,
+    # accumulated blocks inflate later queries 2-3x (measured:
+    # dedup_clusters 4.0 s with the barrier vs 9.4 s when run third
+    # without it) — the r3 bench's +86-292 % "regressions" on late
+    # sub-2 s queries were this accumulation, not the queries.
+    # Queries never share state across iterations, so a full sweep
+    # between them is always safe.
 
     spread = {}
 
@@ -278,7 +237,7 @@ def main():
             # no barrier for the baseline workloads: it would evict
             # their cached createDataFrame inputs mid-measurement
             if barrier_ok:
-                _barrier()
+                release_blocks(spark)
             time.sleep(1)
             reps = sorted(reps + _timed_reps(fn))[:REPS]
             attempts += 1
@@ -291,13 +250,13 @@ def main():
             qs[name](spark, warm_dir).count()
         except Exception:
             pass
-        _barrier()
+        release_blocks(spark)
         reps = _measure(name, lambda: qs[name](spark, SF_DIR))
         timings[name] = round(statistics.median(reps), 3)
         spread[name] = round(max(reps) - min(reps), 3)
 
     # extra settle before the baseline workloads
-    _barrier()
+    release_blocks(spark)
     time.sleep(2)
 
     for name, builder in WORKLOADS:
@@ -305,7 +264,7 @@ def main():
             continue
         # sweep BEFORE the builder caches its inputs (never between the
         # cache and the timed join, which would evict them)
-        _barrier()
+        release_blocks(spark)
         join_fn = builder(spark)  # input setup excluded from the timing
         reps = _measure(name, join_fn, barrier_ok=False)
         timings[name] = round(statistics.median(reps), 3)
@@ -324,6 +283,7 @@ def main():
     # phantom 2x minhash_eval "regression" (r11 adjudication,
     # PLANS.md).  "queries" goes LAST so whatever survives truncation
     # is always real medians.
+    session_settings = settings(spark)
     full = {
         "metric": "bench_total_wall",
         "value": total,
@@ -332,6 +292,7 @@ def main():
         "reps": REPS,
         "spread": spread,
         "respreads": respreads,
+        "session": session_settings,
         "queries": timings,
     }
     # The harness that runs this keeps only a small TAIL of stdout and

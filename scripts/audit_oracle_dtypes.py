@@ -21,41 +21,20 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from harness import duck_views, session  # noqa: E402
+
 INTEGRAL_SPARK = {"tinyint", "smallint", "int", "integer", "bigint", "long"}
 FLOAT_SPARK = {"float", "double"}
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    import duckdb
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle_dtype_audit")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    spark = session("oracle_dtype_audit")
+    con = duck_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -13,8 +13,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from harness import session  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 DEFAULT = [
     "record_linkage",
@@ -53,20 +54,7 @@ def main() -> None:
     round_, tag = sys.argv[1], sys.argv[2]
     names = sys.argv[3:] or DEFAULT
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"capture_plans_{round_}")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(f"capture_plans_{round_}")
 
     import __spark_entry__ as entrymod
     from pandance_spark.plans.mem import explain_str

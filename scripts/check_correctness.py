@@ -10,43 +10,13 @@ Usage: python scripts/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import datetime as _dt
-import decimal
-import hashlib
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def canon(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(round(v, 9))
-    if isinstance(v, decimal.Decimal):
-        return str(v.normalize())
-    if isinstance(v, _dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, list):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    return str(v)
-
-
-def value_hash(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("\x1f".join(canon(r[i]) for i in order) for r in rows)
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode())
-        h.update(b"\n")
-    return h.hexdigest()
+from harness import duck_views, session, value_hash  # noqa: E402
 
 
 def main():
@@ -64,29 +34,10 @@ def main():
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
-    import duckdb
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("correctness_check")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    spark = session("correctness_check")
+    con = duck_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

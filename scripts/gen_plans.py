@@ -7,9 +7,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import datetime as dt
-
-from pyspark.sql import SparkSession, functions as F
+from harness import session  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from pandance_spark import asof_join, fuzzy_join, ineq_join, theta_join
 from pandance_spark.plans.mem import explain_str
@@ -17,13 +16,7 @@ from pandance_spark.sources import load_table
 
 SF = "/root/testdata/sf0.1"
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "16")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+spark = session("gen_plans")
 
 part = load_table(spark, SF, "part").select("p_partkey", "p_retailprice")
 cust = load_table(spark, SF, "customer").select("c_custkey", "c_acctbal")
@@ -230,7 +223,8 @@ sections.append(STATIC_SECTIONS)
 
 header = (
     "# PLANS — physical-plan evidence for the core operators\n\n"
-    "Generated by `scripts/gen_plans.py` against sf0.1 on local[8]; rerun "
+    "Generated by `scripts/gen_plans.py` against sf0.1 on "
+    f"{spark.sparkContext.master}; rerun "
     "after planner-visible changes. What to look for in each plan is noted "
     "per section.\n\n"
 )

@@ -40,13 +40,13 @@ def main():
 
     from pyspark.sql import functions as F
 
-    from host_session import host_session
+    from harness import session
     from pandance_spark.operators.dedup import (
         dedup_substrings,
         fingerprint_overlap_join,
     )
 
-    spark = host_session()
+    spark = session("hot_key_probe")
 
     def corpus(n_docs: int):
         # unique filler (doc-id-salted tokens) + one shared boilerplate

@@ -18,9 +18,14 @@ Each copy k gets:
   token was measured leaking: long docs kept ~0.97 cross-copy
   Jaccard, so minhash pairs grew x971 at x10 input — data growth
   masquerading as engine behavior.)
+- ``customer``: ``c_custkey`` offset by k*stride, the stride a multiple
+  of 9 so the ``% 3`` and ``% 9`` buckets of ``record_linkage`` keep
+  their shares, and ``c_name`` regenerated from the new key in the
+  TPC-H ``Customer#%09d`` stencil (names stay unique, and the
+  gram-collision structure of the real names grows with the copies).
 
 Usage: python scripts/make_scaled_fixture.py OUT_DIR [SRC_DIR] [FACTOR]
-Idempotent: skips generation when OUT_DIR already has both tables.
+Idempotent: skips generation when OUT_DIR already has all three tables.
 """
 
 import os
@@ -36,9 +41,11 @@ def make_scaled_fixture(
 
     from pandance_spark.sources import load_table
 
-    ev_path = os.path.join(out_dir, "events.parquet")
-    doc_path = os.path.join(out_dir, "documents.parquet")
-    if os.path.isdir(ev_path) and os.path.isdir(doc_path):
+    ev_path, doc_path, cust_path = (
+        os.path.join(out_dir, f"{t}.parquet")
+        for t in ("events", "documents", "customer")
+    )
+    if all(os.path.isdir(p) for p in (ev_path, doc_path, cust_path)):
         return out_dir
     os.makedirs(out_dir, exist_ok=True)
 
@@ -71,6 +78,18 @@ def make_scaled_fixture(
         F.length(new_text).cast("long").alias("n_chars"),
     )
     big_docs.repartition(32).write.mode("overwrite").parquet(doc_path)
+
+    cust = load_table(spark, src_dir, "customer")
+    c_stride = -(-(cust.agg(F.max("c_custkey")).first()[0] + 1) // 9) * 9
+    key = F.col("c_custkey") + F.col("__k") * c_stride
+    new_cols = {
+        "c_custkey": key,
+        "c_name": F.format_string("Customer#%09d", key),
+    }
+    big_cust = cust.crossJoin(F.broadcast(copies)).select(
+        *[new_cols.get(c, F.col(c)).alias(c) for c in cust.columns]
+    )
+    big_cust.repartition(8).write.mode("overwrite").parquet(cust_path)
     return out_dir
 
 
@@ -79,9 +98,9 @@ def main():
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
-    from host_session import host_session
+    from harness import session
 
-    spark = host_session()
+    spark = session("make_scaled_fixture")
     make_scaled_fixture(spark, out, src, factor)
     print(f"scaled fixture ready at {out} ({factor}x {src})")
 

@@ -17,6 +17,9 @@ python scripts/check_correctness.py /root/testdata/sf0.1 \
 # canonicalization class of mismatch (HUGEINT/DECIMAL -> float64)
 # is invisible to the fetchall-based gate above — audit every oracle
 python scripts/audit_oracle_dtypes.py /root/testdata/sf0.01
+# standing streaming parity gate: every streaming operator replayed
+# over micro-batches vs its batch twin vs a DuckDB oracle (sf0.001)
+python scripts/streaming_parity.py
 
 # standing 10x scaling gate (r9 verdict item 5): every NEW query of
 # the round goes in this list; wall must stay within 3x of

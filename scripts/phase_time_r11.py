@@ -18,30 +18,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from harness import release_blocks, session  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
 
 
 def main() -> None:
-    for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("phase_time_r11")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "16g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import gc
+    spark = session("phase_time_r11")
 
     import __spark_entry__ as entrymod
 
@@ -52,19 +36,6 @@ def main() -> None:
         if only
         else list(qs)
     )
-
-    def _barrier():
-        gc.collect()
-        try:
-            spark.catalog.clearCache()
-            it = (
-                spark.sparkContext._jsc.getPersistentRDDs().values().iterator()
-            )
-            while it.hasNext():
-                it.next().unpersist(False)
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
 
     warm_dir = SF_DIR.replace("sf0.1", "sf0.001")
     if not os.path.isdir(warm_dir):
@@ -80,7 +51,7 @@ def main() -> None:
             ).save()
         except Exception:
             pass
-        _barrier()
+        release_blocks(spark)
         builds, opts, execs = [], [], []
         try:
             for _ in range(REPS):

@@ -16,7 +16,9 @@ Usage:
 ``--max-ratio R`` exits 1 when any per-step wall ratio exceeds
 R x max(input ratio, rows-out ratio) — wire it into a gate; without it
 the probe only reports.  A dir named ``@sf1`` is materialized on the
-fly via scripts/make_scaled_fixture.py (10x sf0.1, /tmp cache).
+fly via scripts/make_scaled_fixture.py (10x sf0.1, /tmp cache), so
+``--queries record_linkage --sfs /root/testdata/sf0.1,@sf1`` measures
+the edit-distance linkage's second decade on scaled customer names.
 """
 
 import argparse
@@ -41,9 +43,9 @@ def main():
     args = ap.parse_args()
 
     import __spark_entry__ as e
-    from host_session import host_session
+    from harness import duck_views, session
 
-    spark = host_session()
+    spark = session("scale_probe")
 
     sfs = []
     for s in args.sfs.split(","):
@@ -54,21 +56,15 @@ def main():
             s = make_scaled_fixture(spark, SF1_DIR)
         sfs.append(s)
 
-    import duckdb
-
     def n_input_rows(sf):
         # documents+events proxy for input volume (the tables every
         # probe-class query scans)
-        n = 0
-        for t in ("documents", "events"):
-            p = os.path.join(sf, f"{t}.parquet")
-            if os.path.exists(p):
-                n += duckdb.sql(
-                    f"SELECT count(*) FROM '{p}/*.parquet'"
-                    if os.path.isdir(p)
-                    else f"SELECT count(*) FROM '{p}'"
-                ).fetchone()[0]
-        return n
+        con = duck_views(sf)
+        return sum(
+            con.sql(f"SELECT count(*) FROM {t}").fetchone()[0]
+            for t in ("documents", "events")
+            if os.path.exists(os.path.join(sf, f"{t}.parquet"))
+        )
 
     inputs = {sf: n_input_rows(sf) for sf in sfs}
     qs = e.queries()

@@ -170,3 +170,28 @@ def test_bench_short_line_order_and_size():
     # per entry: "name":123456, -> name + ~10 chars of syntax/digits
     est = 300 + 40 * (longest + 11)
     assert est < 2000, est
+
+
+def test_one_session_factory():
+    """Every Spark entry point outside the library sizes its session
+    through ``scripts/harness.py``: no other file of ``bench.py`` and
+    ``scripts/*.py`` names a Spark master or a driver heap, so no script
+    can oversubscribe the host or ask for more heap than it has.
+
+    Deliberately outside the check: ``perfbench/`` is the benchmark and
+    keeps its own fixed steadiness settings, and ``tests/conftest.py``
+    keeps its test fixture session, whose 8g heap the tests have always
+    run with (the factory's quarter-of-RAM default could starve them on
+    a small host)."""
+    import glob
+    import re
+
+    pattern = re.compile(r"\.master\(|spark\.driver\.memory")
+    offenders = [
+        f"{path}:{n}"
+        for path in ["bench.py", *sorted(glob.glob("scripts/*.py"))]
+        if path != "scripts/harness.py"
+        for n, line in enumerate(open(path), 1)
+        if pattern.search(line)
+    ]
+    assert offenders == []
