@@ -97,12 +97,12 @@ def release_blocks(spark) -> None:
         pass
 
 
-def duck_views(sf_dir: str, con=None):
+def duck_views(sf_dir: str):
     """A DuckDB connection with a view per fixture table found in
     ``sf_dir`` (a ``<table>.parquet`` file or directory of parts)."""
     import duckdb
 
-    con = con or duckdb.connect()
+    con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):

@@ -186,7 +186,7 @@ def test_one_session_factory():
     import glob
     import re
 
-    pattern = re.compile(r"\.master\(|spark\.driver\.memory")
+    pattern = re.compile(r"\.master\(|spark\.master|spark\.driver\.memory")
     offenders = [
         f"{path}:{n}"
         for path in ["bench.py", *sorted(glob.glob("scripts/*.py"))]
